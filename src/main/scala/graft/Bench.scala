@@ -2,6 +2,11 @@ package graft
 
 import graft.tools.Jsons.{str => js}
 
+/** Suite timing harness: `runMain graft.Bench [query…]` times every
+  * registered query (or only the named ones) at `SPARK_GRAFT_SF_DIR`.
+  * Each query runs [[Passes]] cache-cleared passes and is reported at the
+  * median; the per-query [min, max] lands in the chunk lines' "spread" map.
+  */
 object Bench {
   // Per-query accounting note: the dedup family each rebuild the staged
   // shingle table inside their timed window because run() clears all
@@ -10,11 +15,6 @@ object Bench {
   // suite total counts the ~same staging stage several times; cross-round
   // trends on those queries move together when staging cost moves. The
   // machine-readable "staged" list in the output JSON marks them.
-  // Known jitter: q07 carries THREE broadcast builds in its timed window
-  // (driver-side hash-relation construction is scheduler-sensitive);
-  // adjudicated across rounds at 0.95-1.26s on unchanged code with
-  // back-to-back runs 0.2s apart — treat <= ~1.3s as harness noise, not
-  // a plan regression (the plan itself is PlanSpec-pinned).
   private val stagedQueries = Seq("q31_minhash_lsh", "q32_simhash",
     "q33_ngram_jaccard", "q38_components", "q39_dedupe_corpus",
     "q48_neardup_gate", "q51_decontaminate", "q58_boilerplate",
@@ -29,303 +29,7 @@ object Bench {
     "q114_incremental_topk", "q116_incremental_extrema_enforced",
     "q73_lm_score")
 
-  // Adjudicated per-query clean-run bands (seconds) at sf0.1 / local[32]:
-  // lo ~ the fast steady-state, hi ~ the upper edge of the band observed
-  // across rounds 6-9 after discarding runs independently adjudicated as
-  // machine noise (r9's recorded artifact) plus later rounds' local runs.
-  // Round 11 re-derived every lo as min(previous lo, 0.9x the best of
-  // four same-code full runs) — the r10 verdict found 28 lo bands set
-  // from loaded-box measurements sitting above the clean steady state,
-  // so lo now brackets every fast observation on record. hi bands are
-  // the retime thresholds and reflect clean-box uppers; they were left
-  // untouched EXCEPT seven (q42/q43/q45/q46/q48/q51/q62) whose best
-  // observation across all four clean runs exceeded the rounds-6-9 hi —
-  // the box's current steady state sits above the old band on those
-  // (untouched code, ~1.2-1.5x vs the r10 recording across many
-  // neighbors too), so hi := 1.15x best-of-four there. The same four
-  // runs also demonstrated 70.1->105.3 s same-code total variance under
-  // transient host stalls, adjudicated by the retime pass — see
-  // SCALING.md's r11 envelope note.
-  // Round 12 re-derived the whole table from four fresh same-code runs
-  // (totals 59.4-67.9 s, zero failures, zero retimes — the host's r11
-  // slow drift largely RESOLVED): every lo refreshed as min(prior,
-  // 0.9x best-of-four); of the six r11-verdict-flagged drifted his
-  // (q54/q32/q47/q51/q29/q52), five measured back INSIDE their bands
-  // and were left alone, q32 alone still sat above and took the same
-  // 1.15x-best rule (1.40 -> 1.67); six wobble-class his whose
-  // clean-run worst crossed the band (q20/q22/q27/q28/q29/q39, all
-  // <= 1.27x) were raised to 1.05x the observed clean worst so a clean
-  // run adjudicates with zero exceedances — the envelope's purpose.
-  // Round 13: every lo refreshed again (min(prior, 0.9x best of three
-  // fresh clean runs, totals 62.0-67.4 s)); THREE of the seven r11
-  // provisional_hi bars RESTORED (q43/q48/q51 — worst-of-three clean
-  // runs back inside the pre-drift bar, the confirmation ADVICE.md's
-  // closure asked for); the other four stay loosened with their records
-  // kept (q42/q45/q46/q62 — clean observations still above the old bar,
-  // so restoring would make every clean run adjudicate dirty). The four
-  // r12-verdict wobble his (q40/q41/q42/q82, judge's clean run <= 1.06x
-  // over) folded to 1.05x the worst clean observation (judge run + the
-  // three r13 runs, one disturbed-run spike excluded per the retime
-  // philosophy — an isolated 1.4-1.9x spike contradicted by the runs
-  // around it is the r9 noise signal, not the steady state), and
-  // q46's retime-confirmed 0.798 took the same rule (0.78 -> 0.84).
-  // Round 14: the derivation is now CODE — graft.tools.EnvelopeRule
-  // (the rule, spec-pinned) + DeriveBenchEnvelope (the main that ingests
-  // recorded run JSONs and emits this table + the exclusion report);
-  // this table was regenerated by that tool from three fresh clean
-  // zero-retime runs (totals 69.3-76.0 s: 6 los tightened, 13 his
-  // raised at 1.05x a crossed clean worst, 5 isolated spikes excluded
-  // by the r9 signal — audit in SCALING.md). The last four
-  // provisional_hi records were RETIRED (see provisionalHi's scaladoc:
-  // three rounds of clean observations above the old bars is a steady
-  // state, not drift).
-  // Round 16: regenerated from three fresh clean zero-retime runs
-  // (bench_runs/r16, totals 75.8/73.2/66.9 s) with the new bench-scale
-  // head warm-in in the protocol: 12 los tightened (q116's dropped
-  // 1.979 -> 1.098 — its in-suite steady state is ~half its fresh-JVM
-  // TimeQuery cost), 5 his raised at 1.05x a crossed clean worst
-  // (q16/q23/q25/q26 — run1's q16-q27 cluster, one localized
-  // transient — plus q51, whose run2 0.652 crossed the prior 0.63
-  // bar outside any window; the r16 audit note originally
-  // undercounted this as 4, fixed per the r16 ADVICE), 3 isolated
-  // spikes excluded by the r9 signal
-  // (q22 0.622 / q27 0.712 / q28 0.633, each contradicted by the two
-  // runs around it) — audit in SCALING.md's round-16 note.
-  // Round 17: regenerated from three fresh clean zero-retime runs
-  // (bench_runs/r17, totals 72.3/62.8/64.7 s): 27 los tightened, 3 his
-  // raised at 1.05x a crossed clean worst (q16 0.499 / q37 1.091 /
-  // q39 2.481 — run1's three hairline 1.00-1.01x marginals, all three
-  // inside the milder of the TWO windows WobbleWindow names in run1:
-  // q16->q39 (11 hot, median 1.29x, +3.96 s) and q57->q71 (7 hot,
-  // median 1.28x, +1.37 s — the excluded q59 spike sits inside it);
-  // runs 2-3 are window-free — the r16 precedent, mechanized; the
-  // window count here was amended per the r17 advisory), 2 isolated spikes
-  // excluded by the r9 signal (q21 0.393 / q59 0.491), and q116's
-  // provisional-wide hi GRADUATED 3.6 -> 1.41 via the new
-  // EnvelopeRule.graduate path (--graduate flag; see the q116 row's
-  // comment) — audit in SCALING.md's round-17 note.
-  // Round 18: regenerated from three fresh clean zero-retime runs
-  // (bench_runs/r18, totals 67.1/62.9/69.9 s; the envelope-aware
-  // WobbleWindow adjudicates run1 window-free, run2 with one light
-  // q93->q99 window, run3 with one q50->q72 window — none of their
-  // members over a band): 9 los tightened, 1 isolated low spike
-  // excluded by the r9 signal (q61 0.223), and ONE hi raised at
-  // 1.05x a crossed clean worst — q116 1.41 -> 1.631 (see its row
-  // comment). The two bands the r17 verdict asked this derivation to
-  // watch both adjudicated clean in all three runs: q19 observed
-  // 0.363-0.442 vs hi 0.5, q01 observed 0.469-0.532 vs hi 0.85 — q19's
-  // r17-confirm 1.20x graze did not recur, so the band stands. Audit
-  // in SCALING.md's round-18 note.
-  // Round 19: regenerated from three fresh clean zero-retime runs
-  // (bench_runs/r19, totals 63.6/58.5/60.1 s; a fourth zero-retime
-  // run was set aside BEFORE deriving — WobbleWindow showed a
-  // 1.54x-median transient window pushing three marginal band
-  // exceedances, host wobble the derivation must not bake in; kept
-  // as bench_runs/r19/windowed.json): 87 los tightened, ZERO his
-  // raised, 2 isolated spikes excluded by the r9 signal (q32 2.385 —
-  // 1.96x its 1.145/1.217 neighbors; q103 0.734 — 1.56x). The
-  // --watch tripwire on q116 (the r18 verdict's three-raises-is-drift
-  // rule) adjudicated all three observations in-band at <= 79% of the
-  // bar: band stands. Audit in SCALING.md's round-19 note.
-  // Round 20: regenerated from three fresh clean zero-retime runs
-  // (bench_runs/r20, totals 64.4/64.3/65.0 s; the envelope-aware
-  // WobbleWindow adjudicates all three at ZERO band exceedances —
-  // only r9-class isolated spikes, plus one light 1.16x-median 3-hot
-  // window in run3, none over a band): 13 los tightened, ZERO his
-  // raised. The --watch tripwire on q04 (the r19 verdict's
-  // confirm-graze bookkeeping) adjudicated all three observations
-  // in-band at <= 72% of the bar (0.782/0.887/0.933 vs hi 1.300):
-  // the r19 confirm's isolated 1.34x graze did not recur; band
-  // stands, strike count stays at one. Audit in SCALING.md's
-  // round-20 note.
-  // Round 22: regenerated from three fresh clean zero-retime runs
-  // (bench_runs/r22/{opt2,opt3,final2}.json, totals 47.0/43.8/48.1 s —
-  // the optimization round's final query-path code): 89 los tightened
-  // (the round's structural wins — the staged vector/CDC/gram frames,
-  // the assignToCentroids fold, the componentsStar distinct cut — moved
-  // most of the suite's fast steady state down), ONE hi raised at 1.05x
-  // a crossed clean worst (q46 0.917 -> 0.975; opt2's clean 0.929
-  // crossed the bar — the fold trades a corpus shuffle for per-row HOF
-  // eval, roughly CPU-neutral at sf0.1), 1 isolated spike excluded by
-  // the r9 signal (q29 0.752, contradicted by 0.39/0.42 beside it).
-  // Historical per-row annotations from rounds 10-18 were consolidated
-  // into this header by the regeneration; their content lives in the
-  // round notes above and SCALING.md. Audit in SCALING.md's round-22
-  // note. Committed
-  // beside BASELINE.md as BENCH_ENVELOPE.json — BenchEnvelopeSpec pins
-  // that the file and this table never drift. Twice in nine rounds the single
-  // recorded bench run misled (r7: a REAL systemic regression — JIT code
-  // cache exhaustion; r9: pure transient machine load), so the bench now
-  // adjudicates itself: any query observed above RetimeFactor x hi is
-  // re-timed once after the main pass, the reported per-query value is
-  // min(observed, retimed), and both numbers land in the machine-readable
-  // "retimed" field — a reader explains the total from the envelope
-  // without a manual rerun. A retime that CONFIRMS the slow number is the
-  // r7 signal (real regression); one that collapses into the band is the
-  // r9 signal (noise, already self-corrected in the total).
-  private[graft] val envelope: Seq[(String, Double, Double)] = Seq(
-    ("q01_pricing_summary", 0.384, 0.85),
-    ("q02_project_filter", 0.077, 0.25),
-    ("q03_filter_in_contains", 0.038, 0.15),
-    ("q04_join_agg", 0.555, 1.3),
-    ("q05_join_semi", 0.113, 0.35),
-    ("q06_join_anti", 0.084, 0.3),
-    ("q07_broadcast_dims", 0.669, 1.3),
-    ("q08_distinct", 0.073, 0.2),
-    ("q09_union", 0.05, 0.18),
-    ("q10_except", 0.135, 0.36),
-    ("q11_window_topn", 0.228, 0.5),
-    ("q12_sort_limit", 0.12, 0.45),
-    ("q13_key_multiplicity", 0.217, 0.5),
-    ("q14_id_synth", 0.046, 0.2),
-    ("q15_first_per_key", 0.137, 0.45),
-    ("q16_sessionize", 0.165, 0.499),
-    ("q17_collect_types", 0.104, 0.3),
-    ("q18_asof_signup", 0.156, 0.5),
-    ("q19_json_roundtrip", 0.25, 0.5),
-    ("q20_clock_math", 0.134, 0.32),
-    ("q21_season_parse", 0.21, 0.5),
-    ("q22_stint_agg", 0.168, 0.537),
-    ("q23_stateful_scan", 0.127, 0.391),
-    ("q24_first_match", 0.092, 0.22),
-    ("q25_interval_join", 0.185, 0.642),
-    ("q26_composite_delta", 0.375, 0.797),
-    ("q27_rollup_totals", 0.305, 0.67),
-    ("q28_lsh_bucketed_exact", 0.318, 0.89),
-    ("q29_repetition", 0.391, 0.8),
-    ("q30_dedup_exact", 0.074, 0.25),
-    ("q31_minhash_lsh", 0.317, 1.5),
-    ("q32_simhash", 0.475, 1.67),
-    ("q33_ngram_jaccard", 0.357, 2.85),
-    ("q34_cosine_neardup", 0.15, 0.4),
-    ("q35_ann_topk", 0.196, 0.5),
-    ("q36_ivf_topk", 0.259, 0.625),
-    ("q37_hyperplane_lsh", 0.346, 1.091),
-    ("q38_components", 0.664, 2.95),
-    ("q39_dedupe_corpus", 0.756, 2.481),
-    ("q40_token_count", 0.108, 0.24),
-    ("q41_quality_score", 0.136, 0.297),
-    ("q42_lang_id", 0.129, 0.28),
-    ("q43_fingerprint", 0.206, 0.334),
-    ("q44_array_exists", 0.046, 0.15),
-    ("q45_tfidf_terms", 0.465, 0.93),
-    ("q46_kmeans", 0.424, 0.975),
-    ("q47_ivf_trained", 0.66, 1.459),
-    ("q48_neardup_gate", 0.307, 1.4),
-    ("q49_hash_split", 0.031, 0.12),
-    ("q50_pack_windows", 0.09, 0.221),
-    ("q51_decontaminate", 0.36, 0.684),
-    ("q52_corpus_mix", 0.066, 0.19),
-    ("q53_embed_dedup", 1.921, 4.7),
-    ("q54_vector_gate", 0.379, 0.841),
-    ("q55_domain_quota", 0.167, 0.45),
-    ("q56_domain_quota_threshold", 0.466, 1.1),
-    ("q57_token_budget_mix", 0.122, 0.45),
-    ("q58_boilerplate", 0.432, 1.2),
-    ("q59_vocab_topk", 0.19, 0.55),
-    ("q60_chunk_windows", 0.09, 0.3),
-    ("q61_composition", 0.083, 0.3),
-    ("q62_fuzzy_neardup", 0.15, 1.15),
-    ("q63_redact", 0.309, 0.6),
-    ("q64_ngram_topk", 0.284, 1.2),
-    ("q65_funnel", 0.221, 0.8),
-    ("q66_retention", 0.165, 0.8),
-    ("q67_rolling_actives", 0.283, 1.2),
-    ("q68_change_intervals", 0.225, 1.1),
-    ("q69_top_paths", 0.327, 1.5),
-    ("q70_key_skew", 0.108, 0.85),
-    ("q71_stratified_sample", 0.07, 0.85),
-    ("q72_attribution", 0.187, 1),
-    ("q73_lm_score", 0.567, 2),
-    ("q74_canonical_pick", 1.129, 3.8),
-    ("q75_daily_anomaly", 0.135, 0.8),
-    ("q76_semantic_dedup", 0.342, 1.3),
-    ("q77_soft_quality", 0.259, 0.8),
-    ("q78_length_quantiles", 0.116, 0.7),
-    ("q79_asof_next", 0.181, 1),
-    ("q80_windowed_funnel", 0.255, 1),
-    ("q81_dup_stats", 0.883, 3.5),
-    ("q82_span_dedup", 0.535, 2.45),
-    ("q83_funnel_latency", 0.272, 0.9),
-    ("q84_source_overlap", 0.616, 2),
-    ("q85_normalize", 0.116, 0.6),
-    ("q86_incremental_agg", 0.209, 0.7),
-    ("q87_bloom_decontaminate", 0.424, 1.8),
-    ("q88_decay_score", 0.182, 0.8),
-    ("q89_label_mode", 0.136, 0.6),
-    ("q90_cooccurrence", 0.264, 1.4),
-    ("q91_gap_histogram", 0.273, 1.1),
-    ("q92_dup_rate_by_source", 0.703, 6.6),
-    ("q93_url_canonicalize", 0.2, 0.5),
-    ("q94_url_dedup", 0.27, 0.6),
-    ("q95_burst_detect", 0.142, 0.9),
-    ("q96_topk_per_source", 0.146, 1.1),
-    ("q97_cluster_purity", 0.643, 2.2),
-    ("q98_freshness", 0.164, 0.7),
-    ("q99_returns_topk", 0.556, 2),
-    ("q100_local_volume", 0.413, 1.5),
-    ("q101_quality_calibrated", 0.179, 1),
-    ("q102_top_terms_per_source", 0.136, 0.9),
-    ("q103_funnel_collapsed", 0.398, 1),
-    ("q104_decay_skew_safe", 0.204, 1),
-    ("q105_burst_skew_safe", 0.27, 0.9),
-    ("q106_winsorize", 0.191, 0.9),
-    ("q107_asof_nearest", 0.207, 1.6),
-    ("q108_incremental_extrema", 0.47, 1.7),
-    ("q109_embed_dedup_lsh", 1.399, 2.89),
-    ("q110_incremental_distinct", 0.325, 0.827),
-    ("q111_semantic_decontaminate", 0.313, 1.2),
-    ("q112_pps_token_sample", 0.094, 0.8),
-    ("q113_split_leakage", 0.423, 3.9),
-    ("q114_incremental_topk", 0.554, 1.3),
-    ("q115_split_leakage_report", 0.577, 2.2),
-    ("q116_incremental_extrema_enforced", 0.822, 1.631))
-
-  private[graft] val RetimeFactor = 2.0
-
-  /** Pre-drift hi bars kept on record for queries whose bands were
-    * loosened under a host slowdown, restored once clean runs fit back
-    * inside them (the r11 protocol; [[graft.tools.EnvelopeRule]] applies
-    * the restore automatically). EMPTY since round 14: of the seven r11
-    * records, three restored in r13 (q43/q48/q51); the last four
-    * (q42 0.22 / q45 0.65 / q46 0.65 / q62 0.8) were RETIRED in r14
-    * after three further rounds of clean zero-retime observations all
-    * sat above the old bars (r14 worsts: q42 0.274, q45 0.794,
-    * q46 0.873, q62 1.034 — and the r13 locals agreed) — the loosened
-    * band IS the steady state, not drift, so keeping a bar no clean run
-    * can meet would make every future run adjudicate dirty. The retired
-    * values stay recorded here and in SCALING.md's r14 note; a future
-    * speedup that brings clean runs back under them can re-add the
-    * record and the rule restores it on the next derivation. */
-  private[graft] val provisionalHi: Map[String, Double] = Map.empty
-
-  /** The committed-file rendering of [[envelope]] — one source of truth;
-    * BenchEnvelopeSpec asserts BENCH_ENVELOPE.json equals this string. */
-  private[graft] def envelopeJson: String = {
-    val note = "Adjudicated per-query clean-run bands (seconds) at " +
-      "sf0.1 local[32], rounds 6-9 plus round-10..19 locals. The " +
-      "derivation rule is committed code since round 14 — " +
-      "graft.tools.EnvelopeRule (spec-pinned) applied by " +
-      "DeriveBenchEnvelope over recorded clean-run JSONs: lo = " +
-      "min(prior lo, 0.9x best clean); hi raised only where a clean " +
-      "zero-retime run crossed the band, to 1.05x the worst clean " +
-      "observation; isolated spikes contradicted by surrounding runs " +
-      "excluded as the r9 noise signal. Round 14 regenerated the table " +
-      "from three fresh clean runs and RETIRED the last four " +
-      "provisional_hi records (q42 0.22 / q45 0.65 / q46 0.65 / q62 " +
-      "0.8 — three rounds of clean observations above the old bars is " +
-      "the steady state, not drift; values stay recorded in " +
-      "Bench.provisionalHi's scaladoc for a future re-add). Source of " +
-      "truth: Bench.envelope " +
-      "(BenchEnvelopeSpec pins no drift). Bench re-times any query " +
-      "observed above 2x hi and reports both numbers in the output's " +
-      "'retimed' field; the per-query value is min(observed, retimed)."
-    envelope.map { case (q, lo, hi) =>
-      val prov = provisionalHi.get(q)
-        .map(p => s""", "provisional_hi": $p""").getOrElse("")
-      s"""  "$q": {"lo": $lo, "hi": $hi$prov}"""
-    }.mkString(s"""{\n  "_note": "$note",\n""", ",\n", "\n}\n")
-  }
+  private val Passes = 3
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -336,6 +40,11 @@ object Bench {
       case Nil => ()
       case missing => sys.error(s"staged list names unknown queries: $missing")
     }
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val suite =
+      if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
+      else args.toSeq.distinct.map(q => q -> SparkEntry.queries(q))
     val spark = Sessions.local("graft-bench")
     // Warm the JVM once per PLAN SHAPE, not just once per process: run every
     // query at the smallest scale factor (untimed) before any measurement.
@@ -360,7 +69,7 @@ object Bench {
         sfDir
       }
     }
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    suite.foreach { case (name, fn) =>
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $name failed (ignored): ${e.getMessage}")
@@ -369,15 +78,15 @@ object Bench {
     // Bench-SCALE warm-in for the head of the run order (r15): the
     // sf0.001 pass above compiles every plan's generated code, but C2's
     // profile-guided recompilation is heated by ITERATIONS, and ~1% of
-    // the data yields too few loop trips — ProfQ07 measured ~0.7 s of
-    // C2 warm-in landing on the first timed executions, i.e. on the
-    // alphabetical head q01..q07 (the recurring marginal-exceedance
-    // wobble class, adjudicated round after round). One untimed pass of
-    // those head queries at the TIMED scale pays the warm-in before any
-    // measurement; later queries already ride a hot JIT by the time the
-    // suite reaches them. Cache-cleared like every timed run, so nothing
-    // here subsidizes a measurement.
-    SparkEntry.queries.toSeq.sortBy(_._1).take(7).foreach { case (name, fn) =>
+    // the data yields too few loop trips — the q07 profiler
+    // (bd1515d:src/main/scala/graft/tools/ProfQ07.scala) measured ~0.7 s
+    // of C2 warm-in landing on the first timed executions, i.e. on the
+    // head of the run order. One untimed pass of those head queries at
+    // the TIMED scale pays the warm-in before any measurement; later
+    // queries already ride a hot JIT by the time the suite reaches them.
+    // Cache-cleared like every timed run, so nothing here subsidizes a
+    // measurement.
+    suite.take(7).foreach { case (name, fn) =>
       spark.catalog.clearCache()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
@@ -400,8 +109,6 @@ object Bench {
         }
     }
     codeCacheReport("post-warmup")
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    val flaky = scala.collection.mutable.ListBuffer.empty[String]
     // One timed run: clear all cached blocks first so no query is billed
     // for (or subsidized by) another query's persisted stages, then
     // materialize through the noop sink — unlike count(), noop touches
@@ -419,104 +126,51 @@ object Bench {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // Best-of-2: single-shot timings showed one-off multi-second stalls
-      // (GC/scheduler noise) on queries that run in ~1s steady-state. A
-      // second-run failure keeps the first, valid measurement — only a
-      // query that never succeeded is reported failed; the name still
-      // lands in the machine-readable "flaky" array so an intermittent
-      // crash (e.g. a sporadic OOM) is visible to the driver, not only on
-      // stderr.
-      try {
-        val a = timeOne(fn)
-        val b =
-          try Some(timeOne(fn))
-          catch { case e: Throwable =>
-            flaky += name
-            System.err.println(
-              s"[bench] $name second run failed (keeping first timing): ${e.getMessage}")
-            None
-          }
-        name -> b.fold(a)(math.min(a, _))
-      } catch { case e: Throwable =>
-        failed += name
+    // Every pass counts: a query that fails any pass is reported failed
+    // with no timing, so an intermittent crash (e.g. a sporadic OOM) is
+    // never hidden behind a passing retry.
+    val passes: Seq[(String, Seq[Double])] = suite.map { case (name, fn) =>
+      try name -> Seq.fill(Passes)(timeOne(fn)).sorted
+      catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        name -> -1.0 // sentinel: failed queries carry no timing (NaN isn't JSON)
+        name -> Nil
       }
     }
-    // Self-adjudication pass (see the envelope note): re-time every query
-    // that landed above RetimeFactor x its committed band. Runs AFTER the
-    // full suite so a transient load spike mid-suite has passed by the
-    // time the outliers re-run; a retime failure keeps the observed
-    // number and marks the query flaky.
-    val envHigh = envelope.map { case (q, _, hi) => q -> hi }.toMap
-    envelope.map(_._1).filterNot(SparkEntry.queries.contains) match {
-      case Nil => ()
-      case unknown => sys.error(s"envelope names unknown queries: $unknown")
-    }
-    SparkEntry.queries.keys.filterNot(envHigh.contains).foreach(q =>
-      System.err.println(s"[bench] WARN: $q has no envelope entry — " +
-        "outliers on it cannot be adjudicated; add its band after first measurement"))
-    val retimed = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val adjudicated = results.map { case (name, t) =>
-      envHigh.get(name).filter(hi => t >= 0 && t > RetimeFactor * hi) match {
-        case None => name -> t
-        case Some(hi) =>
-          try {
-            val again = timeOne(SparkEntry.queries(name))
-            retimed(name) = (t, again)
-            System.err.println(f"[bench] $name observed $t%.3fs > ${RetimeFactor}x " +
-              f"envelope hi $hi%.3fs; retimed $again%.3fs")
-            name -> math.min(t, again)
-          } catch { case e: Throwable =>
-            flaky += name
-            System.err.println(
-              s"[bench] $name retime failed (keeping observed): ${e.getMessage}")
-            name -> t
-          }
-      }
-    }
+    val failed = passes.collect { case (q, ts) if ts.isEmpty => q }
+    // sentinel: failed queries carry no timing (NaN isn't JSON)
+    def median(ts: Seq[Double]): Double = if (ts.isEmpty) -1.0 else ts(ts.size / 2)
+    val results = passes.map { case (q, ts) => q -> median(ts) }
     // release the staged shingle cache the last query left behind (the
     // dedup family's staged table lives in the SQL cache; run() clears it
     // between queries, this frees the final query's entry)
     spark.catalog.clearCache()
     codeCacheReport("post-run")
-    val qs = adjudicated.map { case (k, v) => js(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val total = adjudicated.map(_._2).filter(_ >= 0).sum
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => js(k) + ":" + v }.mkString("{", ",", "}")
+    val total = results.map(_._2).filter(_ >= 0).sum
     val failedJson = failed.map(js(_)).mkString("[", ",", "]")
-    val flakyJson = flaky.map(js(_)).mkString("[", ",", "]")
-    val stagedJson = stagedQueries.map(js(_)).mkString("[", ",", "]")
-    val retimedJson = retimed.map { case (q, (obs, re)) =>
-      js(q) + s""":{"observed":$obs,"retimed":$re,"hi":${envHigh(q)}}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"flaky":$flakyJson,"staged":$stagedJson,"retimed":$retimedJson,"sf":${js(sfDir)}}""")
+    val stagedJson = stagedQueries.filter(q => suite.exists(_._1 == q))
+      .map(js(_)).mkString("[", ",", "]")
+    val qs = obj(results.map { case (q, t) => q -> t.toString })
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"staged":$stagedJson,"sf":${js(sfDir)}}""")
     // The driver archives only a bounded TAIL of stdout; at 100+ queries
-    // the full line above truncates mid-map and loses the headline (the
-    // r11 verdict: BENCH_r10/r11 carried no recoverable total). This
-    // compact trailer restates the adjudicated totals LAST, so any tail
-    // capture still carries a parseable summary — including the slowest
-    // queries (the r12 verdict: the per-query map truncated away, so the
-    // expensive-query plan audit needed a manual rerun; the top-10 IS
-    // that audit's working set, and ~500 bytes keeps the trailer inside
-    // any plausible tail capture).
-    // The per-query map above is the part that truncates away in bounded
-    // tail captures (the r21 PERF comparison came back empty because the
-    // archived r20 tail cut the line mid-map). Re-emit it AFTER the main
-    // line in bounded ~30-entry chunks — each chunk line is a complete,
-    // independently parseable JSON object, so ANY tail capture that
-    // reaches this point carries a reconstructable per-query map
-    // ("metric":"queries_part", join the "queries" objects over parts
-    // 0..n_parts-1). Pure addition: the original "total" line and the
-    // trailer below are unchanged.
-    val chunks = adjudicated.grouped(30).toSeq
+    // the full line above truncates mid-map and loses the headline. So the
+    // per-query map is re-emitted AFTER it in ~30-entry chunks — each chunk
+    // line is a complete, independently parseable JSON object (join the
+    // "queries" objects over parts 0..n_parts-1), carrying each query's
+    // [min, max] over its passes — and a compact trailer restates the
+    // totals and the ten slowest queries LAST, so any tail capture still
+    // carries a parseable summary.
+    val chunks = passes.grouped(30).toSeq
     chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val m = chunk.map { case (k, v) => js(k) + ":" + v }.mkString("{", ",", "}")
-      println(s"""{"metric":"queries_part","part":$i,"n_parts":${chunks.size},"queries":$m,"sf":${js(sfDir)}}""")
+      val qs = obj(chunk.map { case (q, ts) => q -> median(ts).toString })
+      val spread = obj(chunk.collect { case (q, ts) if ts.nonEmpty =>
+        q -> s"[${ts.head},${ts.last}]" })
+      println(s"""{"metric":"queries_part","part":$i,"n_parts":${chunks.size},"queries":$qs,"spread":$spread,"sf":${js(sfDir)}}""")
     }
-    val slowest = adjudicated.filter(_._2 >= 0).sortBy(-_._2).take(10)
+    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
       .map { case (q, t) => s"[${js(q)},$t]" }.mkString("[", ",", "]")
-    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n":${adjudicated.size},"failed":${failed.size},"flaky":${flaky.size},"retimed":${retimed.size},"slowest":$slowest,"sf":${js(sfDir)}}""")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n":${results.size},"failed":${failed.size},"slowest":$slowest,"sf":${js(sfDir)}}""")
     spark.stop()
   }
 }

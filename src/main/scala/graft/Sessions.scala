@@ -4,21 +4,26 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory shared by Verify/Bench/tests.
   *
-  * local-mode defaults sized for the harness (local[32], 128 GiB JVM):
-  * shuffle partitions match core count, AQE on so skewed/small shuffles
-  * re-plan at runtime — the same settings that scale to a real cluster,
-  * where `spark.sql.shuffle.partitions` would be set to ~2-3x total cores
-  * and AQE coalesces the rest.
+  * local-mode defaults sized from the machine (local[N] over its
+  * available processors; the heap comes from the launcher, see
+  * build.sbt): shuffle partitions match core count, AQE on so
+  * skewed/small shuffles re-plan at runtime — the same settings that
+  * scale to a real cluster, where `spark.sql.shuffle.partitions` would
+  * be set to ~2-3x total cores and AQE coalesces the rest.
   */
 object Sessions {
+  /** Core count: `SPARK_GRAFT_CPUS` if set, else the machine's. */
+  def cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
   /** Parsed once: the same value feeds both local[N] and
     * spark.sql.shuffle.partitions, so a master-only value like '*' must
     * fail HERE with a clear message, not at the first shuffle. */
-  def cpus: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    require(raw.nonEmpty && raw.forall(_.isDigit) && raw.toInt > 0,
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'")
-    raw.toInt
+  def cpusFrom(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(r) =>
+      require(r.nonEmpty && r.forall(_.isDigit) && r.toInt > 0,
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$r'")
+      r.toInt
   }
 
   def local(appName: String = "graft"): SparkSession = {

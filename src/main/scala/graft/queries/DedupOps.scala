@@ -520,42 +520,11 @@ object DedupOps {
   private[graft] def componentsStarWithRounds(pairs: DataFrame,
       maxIter: Int = 50): (DataFrame, Int) = {
     // canonical undirected edges: lo < hi, distinct (self-pairs dropped)
-    val canon = pairs.select(
+    var edges = pairs.select(
         least(col("doc_a"), col("doc_b")).as("lo"),
         greatest(col("doc_a"), col("doc_b")).as("hi"))
       .filter(col("lo") =!= col("hi")).distinct()
       .localCheckpoint(true)
-    val canonRdds = graft.ops.Checkpoints.rddsOf(canon)
-    // SEED — one hash-to-min contraction before the star cycles (r22):
-    // m0(u) = min(u, N(u)); every edge (a, b) rewrites to the canonical
-    // (m0(a), m0(b)) pair, loops dropped. m0 maps each node into its own
-    // component and is pointwise <= the identity, so the contracted
-    // graph's components are the originals' images and the GLOBAL
-    // component minimum r is a fixed point (m0(r) = r) that survives the
-    // contraction — the star cycles then run on a graph whose
-    // distance-to-root is at least halved (each node starts at its
-    // neighborhood min), trading one aggregation + one edge rewrite for
-    // cycles (VERDICT r21 #1's seeding lever). The final labels compose
-    // back through m0: label(x) = starLabel(m0(x)), with the absent case
-    // (a component whose every edge contracted to a loop) meaning
-    // m0(x) IS that component's minimum. m0 is checkpointed — it is read
-    // by both rewrite joins and by the final composition, and its blocks
-    // are caller-owned like the returned labels (ContextCleaner reaps).
-    val m0 = canon.select(col("lo").as("u"), col("hi").as("v"))
-      .unionByName(canon.select(col("hi").as("u"), col("lo").as("v")))
-      .groupBy(col("u")).agg(min(col("v")).as("nm"))
-      .select(col("u"), least(col("u"), col("nm")).as("m"))
-      .localCheckpoint(true)
-    var edges = canon
-      .join(m0.select(col("u").as("lo"), col("m").as("mlo")), "lo")
-      .join(m0.select(col("u").as("hi"), col("m").as("mhi")), "hi")
-      .select(least(col("mlo"), col("mhi")).as("lo"),
-        greatest(col("mlo"), col("mhi")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct()
-      .localCheckpoint(true)
-    // the canonical edge set is fully consumed (m0 and the seeded edges
-    // are both checkpoint-backed); release its blocks before the cycles
-    canonRdds.foreach(_.unpersist(false))
     var prevRdds = graft.ops.Checkpoints.rddsOf(edges)
     var iter = 0
     var done = false
@@ -636,20 +605,10 @@ object DedupOps {
         iter += 1
       }
       require(done, s"componentsStar did not converge within $maxIter cycles")
-      // star labels over the CONTRACTED node set, composed back through
-      // the seed: every original node x labels as starLabel(m0(x)); an
-      // m0-image absent from the star output means x's whole component
-      // contracted to the single node m0(x), which is then the component
-      // minimum itself (see the seed note above). m0 is keyed uniquely
-      // by u, so the output carries each original node exactly once.
-      val lbl = edges.select(col("hi").as("doc_id"), col("lo").as("label"))
+      edges.select(col("hi").as("doc_id"), col("lo").as("label"))
         .unionByName(
           edges.select(col("lo").as("doc_id"), col("lo").as("label")))
-        .distinct()
-      m0.select(col("u").as("doc_id"), col("m").as("mid"))
-        .join(lbl.withColumnRenamed("doc_id", "mid"), Seq("mid"), "left")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("mid")).as("label")) -> iter
+        .distinct() -> iter
     } catch { case t: Throwable =>
       prevRdds.foreach(_.unpersist(false))
       throw t
