@@ -1,45 +1,26 @@
 package graft
 
+import graft.ops.Staged
 import graft.tools.Jsons.{str => js}
 
 /** Suite timing harness: `runMain graft.Bench [query…]` times every
   * registered query (or only the named ones) at `SPARK_GRAFT_SF_DIR`.
-  * Each query runs [[Passes]] cache-cleared passes and is reported at the
-  * median; the per-query [min, max] lands in the chunk lines' "spread" map.
+  * Each query runs [[Passes]] passes, each in its own [[Staged.scope]], and
+  * is reported at the median; the per-query [min, max] lands in the chunk
+  * lines' "spread" map.
+  *
+  * Per-query accounting: a pass starts with nothing staged and its scope
+  * releases what it staged once the pass is timed, so every query is
+  * billed its own full cost and none rides another's cache. The dedup
+  * family therefore each rebuild the staged shingle table, and the suite
+  * total counts the ~same staging stage several times; the "staged" list
+  * in the output JSON marks the queries that persisted a frame.
   */
 object Bench {
-  // Per-query accounting note: the dedup family each rebuild the staged
-  // shingle table inside their timed window because run() clears all
-  // caches between queries. That is deliberate — every query is billed
-  // its own full cost, none rides another's cache — but it means the
-  // suite total counts the ~same staging stage several times; cross-round
-  // trends on those queries move together when staging cost moves. The
-  // machine-readable "staged" list in the output JSON marks them.
-  private val stagedQueries = Seq("q31_minhash_lsh", "q32_simhash",
-    "q33_ngram_jaccard", "q38_components", "q39_dedupe_corpus",
-    "q48_neardup_gate", "q51_decontaminate", "q58_boilerplate",
-    "q74_canonical_pick", "q81_dup_stats", "q87_bloom_decontaminate",
-    "q92_dup_rate_by_source", "q113_split_leakage",
-    "q115_split_leakage_report",
-    // r22 staged frames: the LSH-family vector queries (stagedVecs),
-    // the selective-recompute CDC maintainers (stagedOrdersCdc), and
-    // the bigram LM scorer (lmFamiliarity's gram frame)
-    "q37_hyperplane_lsh", "q54_vector_gate", "q109_embed_dedup_lsh",
-    "q111_semantic_decontaminate", "q108_incremental_extrema",
-    "q114_incremental_topk", "q116_incremental_extrema_enforced",
-    "q73_lm_score")
-
   private val Passes = 3
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // fail loudly BEFORE the multi-minute warmup if the staged list drifts
-    // from the registry (a renamed query would otherwise mislabel the
-    // machine-readable "staged" array) — a pure lookup, instant
-    stagedQueries.filterNot(SparkEntry.queries.contains) match {
-      case Nil => ()
-      case missing => sys.error(s"staged list names unknown queries: $missing")
-    }
     val unknown = args.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val suite =
@@ -69,8 +50,11 @@ object Bench {
         sfDir
       }
     }
+    def noop(fn: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame, dir: String): Unit =
+      fn(spark, dir).write.format("noop").mode("overwrite").save()
     suite.foreach { case (name, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+      try Staged.scope(noop(fn, warmDir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $name failed (ignored): ${e.getMessage}")
       }
@@ -84,11 +68,10 @@ object Bench {
     // head of the run order. One untimed pass of those head queries at
     // the TIMED scale pays the warm-in before any measurement; later
     // queries already ride a hot JIT by the time the suite reaches them.
-    // Cache-cleared like every timed run, so nothing here subsidizes a
+    // Scoped like every timed run, so nothing here subsidizes a
     // measurement.
     suite.take(7).foreach { case (name, fn) =>
-      spark.catalog.clearCache()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Staged.scope(noop(fn, sfDir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] bench-scale warm-in $name failed (ignored): ${e.getMessage}")
       }
@@ -109,28 +92,25 @@ object Bench {
         }
     }
     codeCacheReport("post-warmup")
-    // One timed run: clear all cached blocks first so no query is billed
-    // for (or subsidized by) another query's persisted stages, then
-    // materialize through the noop sink — unlike count(), noop touches
-    // every column of every row, so Catalyst can't prune the projection.
-    def timeOne(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      spark.catalog.clearCache()
-      // also drop RDD-level blocks (components()' localCheckpoints live
-      // OUTSIDE the SQL cache): between queries nothing references them,
-      // and leaving them to the ContextCleaner lets earlier queries'
-      // blocks pressure later queries' memory. BLOCKING: the sweep runs
-      // before t0, so an async removal cannot bleed into the timed window
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    // One timed run, in its own scope: materialize through the noop sink —
+    // unlike count(), noop touches every column of every row, so Catalyst
+    // can't prune the projection. The scope releases the pass's staged
+    // blocks (blocking) after the clock stops, so no removal bleeds into
+    // the next timed window.
+    val staged = scala.collection.mutable.Set.empty[String]
+    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Double = Staged.scope {
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      noop(fn, sfDir)
+      val t = (System.nanoTime() - t0) / 1e9
+      if (Staged.active.exists(_.persisted)) staged += name
+      t
     }
     // Every pass counts: a query that fails any pass is reported failed
     // with no timing, so an intermittent crash (e.g. a sporadic OOM) is
     // never hidden behind a passing retry.
     val passes: Seq[(String, Seq[Double])] = suite.map { case (name, fn) =>
-      try name -> Seq.fill(Passes)(timeOne(fn)).sorted
+      try name -> Seq.fill(Passes)(timeOne(name, fn)).sorted
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         name -> Nil
@@ -140,17 +120,12 @@ object Bench {
     // sentinel: failed queries carry no timing (NaN isn't JSON)
     def median(ts: Seq[Double]): Double = if (ts.isEmpty) -1.0 else ts(ts.size / 2)
     val results = passes.map { case (q, ts) => q -> median(ts) }
-    // release the staged shingle cache the last query left behind (the
-    // dedup family's staged table lives in the SQL cache; run() clears it
-    // between queries, this frees the final query's entry)
-    spark.catalog.clearCache()
     codeCacheReport("post-run")
     def obj(kvs: Seq[(String, String)]): String =
       kvs.map { case (k, v) => js(k) + ":" + v }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val failedJson = failed.map(js(_)).mkString("[", ",", "]")
-    val stagedJson = stagedQueries.filter(q => suite.exists(_._1 == q))
-      .map(js(_)).mkString("[", ",", "]")
+    val stagedJson = suite.map(_._1).filter(staged).map(js(_)).mkString("[", ",", "]")
     val qs = obj(results.map { case (q, t) => q -> t.toString })
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"staged":$stagedJson,"sf":${js(sfDir)}}""")
     // The driver archives only a bounded TAIL of stdout; at 100+ queries

@@ -20,8 +20,8 @@ object Verify {
     val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (n, _) => wanted(n) }.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.ops.Staged.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // delete any stale or partial result dir: the driver must see the
@@ -35,9 +35,6 @@ object Verify {
         rm(new java.io.File(s"$outDir/$name"))
       }
     }
-    // drop the dedup family's shared staged-shingle cache entry (one per
-    // dir — CacheManager dedupes same-plan persists across the queries)
-    spark.catalog.clearCache()
     import graft.tools.Jsons.{str => q}
     val json = SparkEntry.oracleSql.filter { case (k, _) => wanted(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -3,7 +3,7 @@ package graft.corpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.VectorSim
+import graft.ops.{Staged, VectorSim}
 import graft.queries.{DedupOps, TextOps, VectorOps}
 import graft.sources.{Jsonl, Warehouse}
 
@@ -659,7 +659,7 @@ object CorpusMain {
       semanticBench: Option[String] = None,
       semanticThreshold: Double = 0.3,
       auditSplits: Option[Double] = None,
-      splitCuts: (String, String) = SplitCuts): Unit = {
+      splitCuts: (String, String) = SplitCuts): Unit = Staged.scope {
     // mixing first: membership is a pure hash of (doc_id, rate table), so
     // mixFilter is a broadcast join + filter — no shuffle, nothing read
     // beyond the scan every later stage pays only for the kept fraction of.
@@ -725,394 +725,387 @@ object CorpusMain {
     // the doc_id keying feeds the signature groupBy and the verify joins
     // exchange-free (§2.4). Profiled (ProfCorpus): the unrepartitioned
     // publish carried ~11 s of 1-task stages at sf0.1 on 32 cores.
-    val shAll = DedupOps.shingledOf(urlDeduped
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id")))
-      .persist()
-    try {
-      // decontamination, audited BEFORE the drop is applied: reading the
-      // published audit back both avoids recomputing the overlap and makes
-      // the corpus provably consistent with the evidence on disk
-      val (docs, sh): (DataFrame, DataFrame) = bench match {
-        case Some(b) =>
-          // the audit keeps EVERY overlapping doc with its count; only the
-          // drop applies the threshold, so lowering --min-hits later needs
-          // no recompute and the near-misses stay visible
-          // broadcastBench is a hard promise (Spark refuses, not falls
-          // back, past its broadcast limit) — `--broadcast-bench false`
-          // is the escape hatch for a benchmark too large to broadcast
-          val hits = DedupOps.contamination(
-            shAll, DedupOps.shingledOf(spark.read.parquet(b)), broadcastBench)
-          Warehouse.replaceDir(hits, s"$output/contaminated")
-          val drop = spark.read.parquet(s"$output/contaminated")
-            .filter(col("n_hits") >= minHits).select("doc_id")
-          (urlDeduped.join(drop, Seq("doc_id"), "left_anti"),
-            shAll.join(drop, Seq("doc_id"), "left_anti"))
-        case None =>
-          // (the stale `contaminated` audit, if any, is retired AFTER the
-          // new corpus publishes — see the post-publish block)
-          (urlDeduped, shAll)
+    val shAll = Staged.persist(DedupOps.shingledOf(urlDeduped
+      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))))
+    // decontamination, audited BEFORE the drop is applied: reading the
+    // published audit back both avoids recomputing the overlap and makes
+    // the corpus provably consistent with the evidence on disk
+    val (docs, sh): (DataFrame, DataFrame) = bench match {
+      case Some(b) =>
+        // the audit keeps EVERY overlapping doc with its count; only the
+        // drop applies the threshold, so lowering --min-hits later needs
+        // no recompute and the near-misses stay visible
+        // broadcastBench is a hard promise (Spark refuses, not falls
+        // back, past its broadcast limit) — `--broadcast-bench false`
+        // is the escape hatch for a benchmark too large to broadcast
+        val hits = DedupOps.contamination(
+          shAll, DedupOps.shingledOf(spark.read.parquet(b)), broadcastBench)
+        Warehouse.replaceDir(hits, s"$output/contaminated")
+        val drop = spark.read.parquet(s"$output/contaminated")
+          .filter(col("n_hits") >= minHits).select("doc_id")
+        (urlDeduped.join(drop, Seq("doc_id"), "left_anti"),
+          shAll.join(drop, Seq("doc_id"), "left_anti"))
+      case None =>
+        // (the stale `contaminated` audit, if any, is retired AFTER the
+        // new corpus publishes — see the post-publish block)
+        (urlDeduped, shAll)
+    }
+    // SEMANTIC decontamination (q111) beside the shingle pass: a
+    // PARAPHRASED benchmark item shares no shingle with its source but
+    // sits next to it in embedding space — the docs' vectors probe the
+    // bench's hyperplane band index (bench-sized — tiny — and the
+    // corpus side never shuffles for the probe), exact cosine verifies
+    // each candidate, and every flagged doc publishes with its
+    // (n_hits, max_cos) evidence BEFORE the drop applies — the same
+    // evidence-then-read-back protocol as `contaminated/`. Runs before
+    // dedup for the same cheapest-reduction-first reason: the probe
+    // costs candidates, the banded self-join costs the corpus.
+    val (sdocs, ssh): (DataFrame, DataFrame) = semanticBench match {
+      case Some(sb) =>
+        val benchVecs = VectorSim.prepped(spark.read.parquet(sb))
+        val allVecs = VectorSim.prepped(spark.read.parquet(embeddings.get))
+        val corpusVecs = allVecs.join(
+          docs.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
+        // a doc with NO vectors row — or a ZERO-NORM one (the probe
+        // filters nrm > 0: a zero vector has no cosine to anything, so
+        // it can never reach the band join) — cannot be probed: for
+        // DECONTAMINATION a silent skip means eval leakage publishes
+        // (a stale embedding pipeline looks exactly like a missing
+        // row; a BROKEN one — all-zeros output — looks exactly like a
+        // zero norm), so both gaps are reported loudly —
+        // compactState's coverage rule
+        val uncovered = docs.select(col("doc_id")).join(
+          allVecs.filter(col("nrm") > 0).select(col("vec_id").as("doc_id")),
+          Seq("doc_id"), "left_anti")
+        val sample = uncovered.limit(11).collect().map(_.getLong(0))
+        if (sample.nonEmpty) {
+          val shown = sample.take(10).mkString(", ") +
+            (if (sample.length > 10) ", …" else "")
+          log.error(s"semantic decontamination: doc(s) with no vectors " +
+            s"row (or a zero-norm embedding) pass UNPROBED (sample: " +
+            s"$shown) — benchmark leakage among them publishes " +
+            "unchecked. Legitimate only if these docs never had " +
+            "embeddings; a stale or lagging vectors source (missing " +
+            "rows) or a broken embedding pipeline (all-zero vectors) " +
+            "looks exactly like this.")
+        }
+        // the audit keeps EVERY banded candidate (threshold -1 keeps
+        // all verified cosines) with per-doc candidate/hit counts and
+        // the max cosine; only the read-back drop applies the
+        // threshold — the `contaminated/` philosophy: near-misses stay
+        // visible, and a LOWER threshold later needs no recompute
+        // (down to the banding's recall floor — tightening recall
+        // itself still means a re-run)
+        val hits = VectorOps.lshNearDupAgainstIndex(corpusVecs,
+            VectorOps.vectorBandIndex(benchVecs), benchVecs, -1.0)
+          .groupBy(col("vec_id"))
+          .agg(count(lit(1)).as("n_cand"),
+            sum((col("cos") >= semanticThreshold).cast("long")).as("n_hits"),
+            max(col("cos")).as("max_cos"))
+          .select(col("vec_id").as("doc_id"), col("n_cand"), col("n_hits"),
+            col("max_cos"))
+        Warehouse.replaceDir(hits, s"$output/semantic_contaminated")
+        val drop = spark.read.parquet(s"$output/semantic_contaminated")
+          .filter(col("max_cos") >= semanticThreshold).select("doc_id")
+        (docs.join(drop, Seq("doc_id"), "left_anti"),
+          sh.join(drop, Seq("doc_id"), "left_anti"))
+      case None => (docs, sh)
+    }
+    val pairs = Staged.persist(DedupOps.minhashNearDup(ssh))
+    // audit first: if the run dies after this publish, the pair
+    // evidence is on disk and a rerun recomputes the same corpus
+    Warehouse.replaceDir(pairs, s"$output/near_dup_pairs")
+    // --keep-best swaps each component's min-id survivor for its
+    // best-QUALITY one (q74's rule, ranked by the same scalar the
+    // quota ranks by), and publishes the full doc -> canonical map as
+    // lineage evidence BEFORE the drop applies — every dropped doc's
+    // audit row names the doc that replaced it, so the drop is
+    // reversible and explainable like every other stage's
+    def collapse(frame: DataFrame, prs: DataFrame, star: Boolean,
+        audit: String): DataFrame =
+      if (!keepBest) DedupOps.dedupeCorpus(frame, prs, star)
+      else {
+        Warehouse.replaceDir(
+          DedupOps.canonicalByQuality(frame, prs, TextOps.docQuality, star),
+          s"$output/$audit")
+        frame.join(
+          spark.read.parquet(s"$output/$audit")
+            .filter(col("is_canonical")).select("doc_id"),
+          Seq("doc_id"), "left_semi")
       }
-      // SEMANTIC decontamination (q111) beside the shingle pass: a
-      // PARAPHRASED benchmark item shares no shingle with its source but
-      // sits next to it in embedding space — the docs' vectors probe the
-      // bench's hyperplane band index (bench-sized — tiny — and the
-      // corpus side never shuffles for the probe), exact cosine verifies
-      // each candidate, and every flagged doc publishes with its
-      // (n_hits, max_cos) evidence BEFORE the drop applies — the same
-      // evidence-then-read-back protocol as `contaminated/`. Runs before
-      // dedup for the same cheapest-reduction-first reason: the probe
-      // costs candidates, the banded self-join costs the corpus.
-      val (sdocs, ssh): (DataFrame, DataFrame) = semanticBench match {
-        case Some(sb) =>
-          val benchVecs = VectorSim.prepped(spark.read.parquet(sb))
-          val allVecs = VectorSim.prepped(spark.read.parquet(embeddings.get))
-          val corpusVecs = allVecs.join(
-            docs.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-          // a doc with NO vectors row — or a ZERO-NORM one (the probe
-          // filters nrm > 0: a zero vector has no cosine to anything, so
-          // it can never reach the band join) — cannot be probed: for
-          // DECONTAMINATION a silent skip means eval leakage publishes
-          // (a stale embedding pipeline looks exactly like a missing
-          // row; a BROKEN one — all-zeros output — looks exactly like a
-          // zero norm), so both gaps are reported loudly —
-          // compactState's coverage rule
-          val uncovered = docs.select(col("doc_id")).join(
-            allVecs.filter(col("nrm") > 0).select(col("vec_id").as("doc_id")),
-            Seq("doc_id"), "left_anti")
-          val sample = uncovered.limit(11).collect().map(_.getLong(0))
-          if (sample.nonEmpty) {
-            val shown = sample.take(10).mkString(", ") +
-              (if (sample.length > 10) ", …" else "")
-            log.error(s"semantic decontamination: doc(s) with no vectors " +
-              s"row (or a zero-norm embedding) pass UNPROBED (sample: " +
-              s"$shown) — benchmark leakage among them publishes " +
-              "unchecked. Legitimate only if these docs never had " +
-              "embeddings; a stale or lagging vectors source (missing " +
-              "rows) or a broken embedding pipeline (all-zero vectors) " +
-              "looks exactly like this.")
-          }
-          // the audit keeps EVERY banded candidate (threshold -1 keeps
-          // all verified cosines) with per-doc candidate/hit counts and
-          // the max cosine; only the read-back drop applies the
-          // threshold — the `contaminated/` philosophy: near-misses stay
-          // visible, and a LOWER threshold later needs no recompute
-          // (down to the banding's recall floor — tightening recall
-          // itself still means a re-run)
-          val hits = VectorOps.lshNearDupAgainstIndex(corpusVecs,
-              VectorOps.vectorBandIndex(benchVecs), benchVecs, -1.0)
-            .groupBy(col("vec_id"))
-            .agg(count(lit(1)).as("n_cand"),
-              sum((col("cos") >= semanticThreshold).cast("long")).as("n_hits"),
-              max(col("cos")).as("max_cos"))
-            .select(col("vec_id").as("doc_id"), col("n_cand"), col("n_hits"),
-              col("max_cos"))
-          Warehouse.replaceDir(hits, s"$output/semantic_contaminated")
-          val drop = spark.read.parquet(s"$output/semantic_contaminated")
-            .filter(col("max_cos") >= semanticThreshold).select("doc_id")
-          (docs.join(drop, Seq("doc_id"), "left_anti"),
-            sh.join(drop, Seq("doc_id"), "left_anti"))
-        case None => (docs, sh)
+    val textDeduped = collapse(sdocs, pairs, star = false, "canonical_map")
+    // vector pass AFTER the text pass, over its survivors only: the
+    // double-dedup a production corpus run actually does. The pair
+    // producer is the LSH-bucketed kernel (banded equi-join, never
+    // all-pairs — the scale path; the exact kernel stays a
+    // verification tool), and the collapse is large-star/small-star:
+    // cosine similarity CHAINS (a~b~c without a~c), so diameter is
+    // unknown and star cycles converge in O(log d) regardless.
+    val deduped = embeddings match {
+      case Some(embPath) =>
+        val n = VectorSim.prepped(spark.read.parquet(embPath))
+          .withColumnRenamed("vec_id", "doc_id")
+          // only survivors' vectors matter: a pair whose side is
+          // already text-deduped away must not drop a survivor, and
+          // filtering BEFORE the banded join shrinks its input
+          .join(textDeduped.select("doc_id"), Seq("doc_id"), "left_semi")
+          .select(col("doc_id").as("vec_id"), col("e"), col("nrm"))
+        val vpairs = Staged.persist(VectorOps.lshNearDup(n, cosThreshold)
+          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"),
+            col("cos")))
+        // same evidence-first protocol as the text pairs: the audit
+        // lands before any drop it justifies
+        Warehouse.replaceDir(vpairs, s"$output/embed_dup_pairs")
+        val collapsed = collapse(textDeduped, vpairs.select("doc_a", "doc_b"),
+          star = true, "embed_canonical_map")
+        Staged.release(vpairs)
+        collapsed
+      case None =>
+        // (the stale vector audit, if any, is retired post-publish)
+        textDeduped
+    }
+    // duplicated-PASSAGE cutting (q82, Lee et al. 2021) AFTER doc-level
+    // dedup (the passes are complementary: dedup drops whole near-dup
+    // docs, this cuts the verbatim passages shared by docs different
+    // enough to both survive) and BEFORE quota/budget (both rank and
+    // sample by quality/token totals, which change when spans are
+    // cut). The audit IS the patch source: affected docs' stats AND
+    // text_clean publish at span_cut/, are read back, and the corpus
+    // text comes from exactly the published patch — the same
+    // evidence-then-read-back protocol as every other stage. A doc
+    // whose every token was covered (dup_frac = 1) carries no novel
+    // text and is dropped; its audit row is the record of that.
+    val spanCut = cutSpans match {
+      case Some(nGram) =>
+        Warehouse.replaceDir(
+          DedupOps.spanDedup(deduped, nGram)
+            .filter(col("n_covered") > 0),
+          s"$output/span_cut")
+        val patch = spark.read.parquet(s"$output/span_cut")
+          .select(col("doc_id"), col("text_clean"))
+        val patched = deduped
+          .join(patch, Seq("doc_id"), "left")
+          .withColumn("text", coalesce(col("text_clean"), col("text")))
+          .drop("text_clean")
+          .filter(length(col("text")) > 0)
+        if (patched.columns.contains("n_chars"))
+          patched.withColumn("n_chars", length(col("text")))
+        else patched
+      case None => deduped
+    }
+    // per-domain quota AFTER dedup (dedup changes per-source counts,
+    // so a pre-dedup cut would under-fill every domain that had
+    // duplicates), audited first like every other drop: the kept
+    // (doc_id, source, quality, rk) rows land on disk, are read back,
+    // and the corpus keeps exactly the audited ids — provably
+    // consistent with the evidence, same protocol as contamination
+    // --quality-floor AFTER span-cutting (quality must describe the
+    // text that publishes) and BEFORE the quota (shed each source's
+    // worst fraction first, then cap what remains): drops exactly
+    // floor(p * n_src) docs per source — source-RELATIVE, so a weak
+    // source sheds its own worst rather than being wiped out by a
+    // global threshold (q101's calibration argument as a stage); the
+    // count-based cut keeps a singleton source's only doc at any p.
+    // Evidence-first like every drop: the dropped rows with their
+    // quality/rank/source-size publish at quality_floor/, membership
+    // reads back from it.
+    // --floor-threshold swaps the window form for the histogram cut
+    // (qualityFloorByThreshold) — IDENTICAL dropped set (monotone
+    // binning, equivalence pinned in TextOpsSpec), histogram-sized
+    // windows instead of a per-source partition sort: the switch to
+    // flip when one source dominates the corpus, same lever as
+    // --quota-heap for the quota (the audit then carries no rn_worst
+    // — the global per-source rank IS the sort being avoided)
+    val floored = qualityFloor match {
+      case Some(p) =>
+        Warehouse.replaceDir(
+          if (floorThreshold) TextOps.qualityFloorByThreshold(spanCut, p)
+          else TextOps.qualityFloorDrops(spanCut, p),
+          s"$output/quality_floor")
+        spanCut.join(
+          spark.read.parquet(s"$output/quality_floor").select("doc_id"),
+          Seq("doc_id"), "left_anti")
+      case None => spanCut
+    }
+    // --quota-heap swaps the window form for the bounded-heap
+    // aggregate (q96's graft_topk) — IDENTICAL cut (same total
+    // order), O(k) state per domain instead of a per-domain
+    // partition sort: the switch to flip when one domain dominates
+    // the corpus and the window's sort partition would hold it whole
+    val capped = quota match {
+      case Some(q) =>
+        Warehouse.replaceDir(
+          if (quotaHeap) TextOps.domainQuotaHeap(floored, q)
+          else TextOps.domainQuota(floored, q),
+          s"$output/domain_quota")
+        floored.join(
+          spark.read.parquet(s"$output/domain_quota").select("doc_id"),
+          Seq("doc_id"), "left_semi")
+      case None => floored
+    }
+    // token budget LAST of the drops, over what every earlier stage
+    // kept: rate mixing, dedup, and the quota all change per-source
+    // token totals, so an earlier sample would target totals the
+    // published corpus no longer has. Audited and read back like the
+    // quota — the kept (doc_id, source, n_tokens, tb_bucket, tb_cut)
+    // rows ARE the membership evidence.
+    val budgeted = tokenBudget match {
+      case Some(b) =>
+        Warehouse.replaceDir(
+          TextOps.mixToTokenBudget(capped, b), s"$output/token_budget")
+        capped.join(
+          spark.read.parquet(s"$output/token_budget").select("doc_id"),
+          Seq("doc_id"), "left_semi")
+      case None => capped
+    }
+    // split and pack IN PLACE: both are per-row/window columns, so
+    // appending them costs zero joins — only the pack window itself
+    // shuffles, once, on the stream key
+    val withSplit = budgeted
+      .withColumn("split",
+        TextOps.splitColumn(col("doc_id"), splitCuts._1, splitCuts._2))
+    // pack per (split, source): a training stream never crosses a
+    // split boundary, so offsets must restart inside each split
+    val packed = capacity
+      .map(c => TextOps.packWindowsAll(withSplit, c, Seq("split", "source")))
+      .getOrElse(TextOps.packWindowsAll(withSplit, streamCols = Seq("split", "source")))
+    val published = Warehouse.overwritePartitions(
+      packed, s"$output/corpus", Seq("split"))
+    // an empty corpus is always a configuration bug (mix rates or a
+    // benchmark that swallowed everything) — and an empty overwrite
+    // leaves NO trace on disk, so failing loudly here is the only
+    // signal the caller gets
+    require(published > 0,
+      "corpus pipeline produced zero documents — check --mix rates " +
+        "and --bench overlap (every doc was filtered, dropped, or deduped)")
+    // stale artifacts from previous runs with OTHER flags are retired
+    // IMMEDIATELY after the new corpus is live — before the optional
+    // export, whose failure must not leave the new corpus described
+    // by the old run's audits. A run that fails earlier leaves the
+    // previous corpus's evidence intact, because the audits on disk
+    // describe the corpus that is still on disk. retireDir also
+    // clears the swap protocol's hidden .old siblings, which
+    // recover() would otherwise resurrect. The jsonl quarantine obeys
+    // the same invariant from the other side: staged before the
+    // pipeline, swapped live only now that the corpus it describes is.
+    if (quarantineStaged) Warehouse.publishStaged(spark, s"$output/quarantine")
+    else Warehouse.retireDir(spark, s"$output/quarantine")
+    if (bench.isEmpty) Warehouse.retireDir(spark, s"$output/contaminated")
+    if (semanticBench.isEmpty)
+      Warehouse.retireDir(spark, s"$output/semantic_contaminated")
+    if (embeddings.isEmpty) Warehouse.retireDir(spark, s"$output/embed_dup_pairs")
+    if (!keepBest) Warehouse.retireDir(spark, s"$output/canonical_map")
+    if (!keepBest || embeddings.isEmpty)
+      Warehouse.retireDir(spark, s"$output/embed_canonical_map")
+    if (!normalize) Warehouse.retireDir(spark, s"$output/normalize_stats")
+    if (cutSpans.isEmpty) Warehouse.retireDir(spark, s"$output/span_cut")
+    if (!urlDedup) Warehouse.retireDir(spark, s"$output/url_dedup")
+    if (qualityFloor.isEmpty)
+      Warehouse.retireDir(spark, s"$output/quality_floor")
+    if (quota.isEmpty) Warehouse.retireDir(spark, s"$output/domain_quota")
+    if (tokenBudget.isEmpty) Warehouse.retireDir(spark, s"$output/token_budget")
+    if (!exportJsonl) Warehouse.retireDir(spark, s"$output/corpus_jsonl")
+    if (chunk.isEmpty) Warehouse.retireDir(spark, s"$output/examples")
+    if (reviewSample.isEmpty)
+      Warehouse.retireDir(spark, s"$output/review_sample")
+    if (!stats) {
+      Warehouse.retireDir(spark, s"$output/corpus_stats")
+      Warehouse.retireDir(spark, s"$output/composition")
+    }
+    if (auditSplits.isEmpty) {
+      Warehouse.retireDir(spark, s"$output/split_leakage")
+      Warehouse.retireDir(spark, s"$output/split_leakage_report")
+    }
+    // optional JSONL mirror of the published corpus — the exchange
+    // format tokenizer/trainer tooling consumes — derived from the
+    // PUBLISHED parquet (so it can never diverge from it), swapped in
+    // whole via the same crash-safe protocol
+    if (exportJsonl) exportJsonlMirror(spark, output)
+    // fixed-length training examples (q60's windows), derived from the
+    // PUBLISHED corpus like the jsonl mirror, so examples and corpus
+    // can never diverge. Stride defaults to the chunk size (disjoint
+    // windows); overlap is opt-in via --chunk-stride. The examples
+    // carry chunk_text, never the full text — the corpus already
+    // holds it once, and duplicating it ~n/stride times per doc would
+    // multiply the footprint for no reader.
+    chunk.foreach { c =>
+      Warehouse.replaceDirWith(spark, s"$output/examples")(staging =>
+        TextOps.chunkWindowsAll(spark.read.parquet(s"$output/corpus"),
+            c, chunkStride.getOrElse(c))
+          .drop("text", "offset", "bin")
+          .write.partitionBy("split").parquet(staging))
+    }
+    // uniform per-source review sample (q71's coordinate), derived
+    // from the PUBLISHED corpus: the human-eval set, full rows joined
+    // back via the broadcast-able id list (k x |sources| rows), stable
+    // across reruns and across growth of unrelated sources
+    reviewSample.foreach { k =>
+      Warehouse.replaceDirWith(spark, s"$output/review_sample")(staging => {
+        val pub = spark.read.parquet(s"$output/corpus")
+        pub.join(broadcast(TextOps.stratifiedSample(pub, k)
+            .select(col("doc_id"), col("sample_rank"))), Seq("doc_id"))
+          .write.parquet(staging)
+      })
+    }
+    // the curation report, over the PUBLISHED corpus (same derive-
+    // from-published rule): one-row sketch statistics plus the
+    // long-form (lang, source) composition — counts and token totals
+    // from one low-cardinality map-side-combinable aggregation
+    if (stats) publishStats(spark, output)
+    // optional at-rest gate index: the (b, v)-bucketed band-index
+    // table the STREAMING twin loads via --index-table — derived from
+    // the PUBLISHED parquet (so it can never diverge from the corpus
+    // it describes, same rule as the jsonl mirror). saveAsTable
+    // overwrite is drop-and-recreate, not a swap: the only reader is
+    // a gate at STARTUP, and a failed write is healed by rerunning —
+    // never by serving a half-written index mid-stream.
+    // one re-shingle pass over the published corpus feeds every text
+    // at-rest artifact that reads it: the (b,v)-bucketed band index,
+    // the doc_id-bucketed shingle table (the gate's probe and verify
+    // sides) — and the split-leakage audit's pair producer
+    if (publishIndex.nonEmpty || publishShingles.nonEmpty ||
+        auditSplits.nonEmpty) {
+      val pubSh = Staged.persist(DedupOps.shingledOf(
+        spark.read.parquet(s"$output/corpus")
+          .repartition(spark.sparkContext.defaultParallelism,
+            col("doc_id"))))
+      publishIndex.foreach(DedupOps.writeCorpusBandIndex(pubSh, _))
+      publishShingles.foreach(DedupOps.writeCorpusShingles(pubSh, _))
+      // --audit-splits: the eval-hygiene audit run over what the
+      // run just SHIPPED (q113/q115 as a stage). The dedup stage
+      // collapses near-dups at ITS threshold regardless of split,
+      // so pairs above it cannot reach publication — what this
+      // audit catches is the band BELOW it (near-misses that still
+      // leak eval signal; the audit threshold is typically lower)
+      // and any banding-recall gap. Evidence first, then its
+      // rendering: split_leakage/ is q113's cross-split pair list
+      // over the published corpus, split_leakage_report/ is q115's
+      // per-(split_a, split_b) summary derived from the PUBLISHED
+      // pair evidence (evidence-then-read-back, like every audit).
+      auditSplits.foreach { t =>
+        Warehouse.replaceDir(
+          DedupOps.crossSplitPairs(DedupOps.minhashNearDup(pubSh, t),
+              splitCuts._1, splitCuts._2)
+            .select(col("doc_a"), col("doc_b"), col("split_a"),
+              col("split_b"), col("jaccard")),
+          s"$output/split_leakage")
+        publishSplitReport(spark, output)
       }
-      val pairs = DedupOps.minhashNearDup(ssh).persist()
-      try {
-        // audit first: if the run dies after this publish, the pair
-        // evidence is on disk and a rerun recomputes the same corpus
-        Warehouse.replaceDir(pairs, s"$output/near_dup_pairs")
-        // --keep-best swaps each component's min-id survivor for its
-        // best-QUALITY one (q74's rule, ranked by the same scalar the
-        // quota ranks by), and publishes the full doc -> canonical map as
-        // lineage evidence BEFORE the drop applies — every dropped doc's
-        // audit row names the doc that replaced it, so the drop is
-        // reversible and explainable like every other stage's
-        def collapse(frame: DataFrame, prs: DataFrame, star: Boolean,
-            audit: String): DataFrame =
-          if (!keepBest) DedupOps.dedupeCorpus(frame, prs, star)
-          else {
-            Warehouse.replaceDir(
-              DedupOps.canonicalByQuality(frame, prs, TextOps.docQuality, star),
-              s"$output/$audit")
-            frame.join(
-              spark.read.parquet(s"$output/$audit")
-                .filter(col("is_canonical")).select("doc_id"),
-              Seq("doc_id"), "left_semi")
-          }
-        val textDeduped = collapse(sdocs, pairs, star = false, "canonical_map")
-        // vector pass AFTER the text pass, over its survivors only: the
-        // double-dedup a production corpus run actually does. The pair
-        // producer is the LSH-bucketed kernel (banded equi-join, never
-        // all-pairs — the scale path; the exact kernel stays a
-        // verification tool), and the collapse is large-star/small-star:
-        // cosine similarity CHAINS (a~b~c without a~c), so diameter is
-        // unknown and star cycles converge in O(log d) regardless.
-        val deduped = embeddings match {
-          case Some(embPath) =>
-            val n = VectorSim.prepped(spark.read.parquet(embPath))
-              .withColumnRenamed("vec_id", "doc_id")
-              // only survivors' vectors matter: a pair whose side is
-              // already text-deduped away must not drop a survivor, and
-              // filtering BEFORE the banded join shrinks its input
-              .join(textDeduped.select("doc_id"), Seq("doc_id"), "left_semi")
-              .select(col("doc_id").as("vec_id"), col("e"), col("nrm"))
-            val vpairs = VectorOps.lshNearDup(n, cosThreshold)
-              .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"),
-                col("cos"))
-              .persist()
-            try {
-              // same evidence-first protocol as the text pairs: the audit
-              // lands before any drop it justifies
-              Warehouse.replaceDir(vpairs, s"$output/embed_dup_pairs")
-              collapse(textDeduped, vpairs.select("doc_a", "doc_b"),
-                star = true, "embed_canonical_map")
-            } finally { vpairs.unpersist(); () }
-          case None =>
-            // (the stale vector audit, if any, is retired post-publish)
-            textDeduped
-        }
-        // duplicated-PASSAGE cutting (q82, Lee et al. 2021) AFTER doc-level
-        // dedup (the passes are complementary: dedup drops whole near-dup
-        // docs, this cuts the verbatim passages shared by docs different
-        // enough to both survive) and BEFORE quota/budget (both rank and
-        // sample by quality/token totals, which change when spans are
-        // cut). The audit IS the patch source: affected docs' stats AND
-        // text_clean publish at span_cut/, are read back, and the corpus
-        // text comes from exactly the published patch — the same
-        // evidence-then-read-back protocol as every other stage. A doc
-        // whose every token was covered (dup_frac = 1) carries no novel
-        // text and is dropped; its audit row is the record of that.
-        val spanCut = cutSpans match {
-          case Some(nGram) =>
-            Warehouse.replaceDir(
-              DedupOps.spanDedup(deduped, nGram)
-                .filter(col("n_covered") > 0),
-              s"$output/span_cut")
-            val patch = spark.read.parquet(s"$output/span_cut")
-              .select(col("doc_id"), col("text_clean"))
-            val patched = deduped
-              .join(patch, Seq("doc_id"), "left")
-              .withColumn("text", coalesce(col("text_clean"), col("text")))
-              .drop("text_clean")
-              .filter(length(col("text")) > 0)
-            if (patched.columns.contains("n_chars"))
-              patched.withColumn("n_chars", length(col("text")))
-            else patched
-          case None => deduped
-        }
-        // per-domain quota AFTER dedup (dedup changes per-source counts,
-        // so a pre-dedup cut would under-fill every domain that had
-        // duplicates), audited first like every other drop: the kept
-        // (doc_id, source, quality, rk) rows land on disk, are read back,
-        // and the corpus keeps exactly the audited ids — provably
-        // consistent with the evidence, same protocol as contamination
-        // --quality-floor AFTER span-cutting (quality must describe the
-        // text that publishes) and BEFORE the quota (shed each source's
-        // worst fraction first, then cap what remains): drops exactly
-        // floor(p * n_src) docs per source — source-RELATIVE, so a weak
-        // source sheds its own worst rather than being wiped out by a
-        // global threshold (q101's calibration argument as a stage); the
-        // count-based cut keeps a singleton source's only doc at any p.
-        // Evidence-first like every drop: the dropped rows with their
-        // quality/rank/source-size publish at quality_floor/, membership
-        // reads back from it.
-        // --floor-threshold swaps the window form for the histogram cut
-        // (qualityFloorByThreshold) — IDENTICAL dropped set (monotone
-        // binning, equivalence pinned in TextOpsSpec), histogram-sized
-        // windows instead of a per-source partition sort: the switch to
-        // flip when one source dominates the corpus, same lever as
-        // --quota-heap for the quota (the audit then carries no rn_worst
-        // — the global per-source rank IS the sort being avoided)
-        val floored = qualityFloor match {
-          case Some(p) =>
-            Warehouse.replaceDir(
-              if (floorThreshold) TextOps.qualityFloorByThreshold(spanCut, p)
-              else TextOps.qualityFloorDrops(spanCut, p),
-              s"$output/quality_floor")
-            spanCut.join(
-              spark.read.parquet(s"$output/quality_floor").select("doc_id"),
-              Seq("doc_id"), "left_anti")
-          case None => spanCut
-        }
-        // --quota-heap swaps the window form for the bounded-heap
-        // aggregate (q96's graft_topk) — IDENTICAL cut (same total
-        // order), O(k) state per domain instead of a per-domain
-        // partition sort: the switch to flip when one domain dominates
-        // the corpus and the window's sort partition would hold it whole
-        val capped = quota match {
-          case Some(q) =>
-            Warehouse.replaceDir(
-              if (quotaHeap) TextOps.domainQuotaHeap(floored, q)
-              else TextOps.domainQuota(floored, q),
-              s"$output/domain_quota")
-            floored.join(
-              spark.read.parquet(s"$output/domain_quota").select("doc_id"),
-              Seq("doc_id"), "left_semi")
-          case None => floored
-        }
-        // token budget LAST of the drops, over what every earlier stage
-        // kept: rate mixing, dedup, and the quota all change per-source
-        // token totals, so an earlier sample would target totals the
-        // published corpus no longer has. Audited and read back like the
-        // quota — the kept (doc_id, source, n_tokens, tb_bucket, tb_cut)
-        // rows ARE the membership evidence.
-        val budgeted = tokenBudget match {
-          case Some(b) =>
-            Warehouse.replaceDir(
-              TextOps.mixToTokenBudget(capped, b), s"$output/token_budget")
-            capped.join(
-              spark.read.parquet(s"$output/token_budget").select("doc_id"),
-              Seq("doc_id"), "left_semi")
-          case None => capped
-        }
-        // split and pack IN PLACE: both are per-row/window columns, so
-        // appending them costs zero joins — only the pack window itself
-        // shuffles, once, on the stream key
-        val withSplit = budgeted
-          .withColumn("split",
-            TextOps.splitColumn(col("doc_id"), splitCuts._1, splitCuts._2))
-        // pack per (split, source): a training stream never crosses a
-        // split boundary, so offsets must restart inside each split
-        val packed = capacity
-          .map(c => TextOps.packWindowsAll(withSplit, c, Seq("split", "source")))
-          .getOrElse(TextOps.packWindowsAll(withSplit, streamCols = Seq("split", "source")))
-        val published = Warehouse.overwritePartitions(
-          packed, s"$output/corpus", Seq("split"))
-        // an empty corpus is always a configuration bug (mix rates or a
-        // benchmark that swallowed everything) — and an empty overwrite
-        // leaves NO trace on disk, so failing loudly here is the only
-        // signal the caller gets
-        require(published > 0,
-          "corpus pipeline produced zero documents — check --mix rates " +
-            "and --bench overlap (every doc was filtered, dropped, or deduped)")
-        // stale artifacts from previous runs with OTHER flags are retired
-        // IMMEDIATELY after the new corpus is live — before the optional
-        // export, whose failure must not leave the new corpus described
-        // by the old run's audits. A run that fails earlier leaves the
-        // previous corpus's evidence intact, because the audits on disk
-        // describe the corpus that is still on disk. retireDir also
-        // clears the swap protocol's hidden .old siblings, which
-        // recover() would otherwise resurrect. The jsonl quarantine obeys
-        // the same invariant from the other side: staged before the
-        // pipeline, swapped live only now that the corpus it describes is.
-        if (quarantineStaged) Warehouse.publishStaged(spark, s"$output/quarantine")
-        else Warehouse.retireDir(spark, s"$output/quarantine")
-        if (bench.isEmpty) Warehouse.retireDir(spark, s"$output/contaminated")
-        if (semanticBench.isEmpty)
-          Warehouse.retireDir(spark, s"$output/semantic_contaminated")
-        if (embeddings.isEmpty) Warehouse.retireDir(spark, s"$output/embed_dup_pairs")
-        if (!keepBest) Warehouse.retireDir(spark, s"$output/canonical_map")
-        if (!keepBest || embeddings.isEmpty)
-          Warehouse.retireDir(spark, s"$output/embed_canonical_map")
-        if (!normalize) Warehouse.retireDir(spark, s"$output/normalize_stats")
-        if (cutSpans.isEmpty) Warehouse.retireDir(spark, s"$output/span_cut")
-        if (!urlDedup) Warehouse.retireDir(spark, s"$output/url_dedup")
-        if (qualityFloor.isEmpty)
-          Warehouse.retireDir(spark, s"$output/quality_floor")
-        if (quota.isEmpty) Warehouse.retireDir(spark, s"$output/domain_quota")
-        if (tokenBudget.isEmpty) Warehouse.retireDir(spark, s"$output/token_budget")
-        if (!exportJsonl) Warehouse.retireDir(spark, s"$output/corpus_jsonl")
-        if (chunk.isEmpty) Warehouse.retireDir(spark, s"$output/examples")
-        if (reviewSample.isEmpty)
-          Warehouse.retireDir(spark, s"$output/review_sample")
-        if (!stats) {
-          Warehouse.retireDir(spark, s"$output/corpus_stats")
-          Warehouse.retireDir(spark, s"$output/composition")
-        }
-        if (auditSplits.isEmpty) {
-          Warehouse.retireDir(spark, s"$output/split_leakage")
-          Warehouse.retireDir(spark, s"$output/split_leakage_report")
-        }
-        // optional JSONL mirror of the published corpus — the exchange
-        // format tokenizer/trainer tooling consumes — derived from the
-        // PUBLISHED parquet (so it can never diverge from it), swapped in
-        // whole via the same crash-safe protocol
-        if (exportJsonl) exportJsonlMirror(spark, output)
-        // fixed-length training examples (q60's windows), derived from the
-        // PUBLISHED corpus like the jsonl mirror, so examples and corpus
-        // can never diverge. Stride defaults to the chunk size (disjoint
-        // windows); overlap is opt-in via --chunk-stride. The examples
-        // carry chunk_text, never the full text — the corpus already
-        // holds it once, and duplicating it ~n/stride times per doc would
-        // multiply the footprint for no reader.
-        chunk.foreach { c =>
-          Warehouse.replaceDirWith(spark, s"$output/examples")(staging =>
-            TextOps.chunkWindowsAll(spark.read.parquet(s"$output/corpus"),
-                c, chunkStride.getOrElse(c))
-              .drop("text", "offset", "bin")
-              .write.partitionBy("split").parquet(staging))
-        }
-        // uniform per-source review sample (q71's coordinate), derived
-        // from the PUBLISHED corpus: the human-eval set, full rows joined
-        // back via the broadcast-able id list (k x |sources| rows), stable
-        // across reruns and across growth of unrelated sources
-        reviewSample.foreach { k =>
-          Warehouse.replaceDirWith(spark, s"$output/review_sample")(staging => {
-            val pub = spark.read.parquet(s"$output/corpus")
-            pub.join(broadcast(TextOps.stratifiedSample(pub, k)
-                .select(col("doc_id"), col("sample_rank"))), Seq("doc_id"))
-              .write.parquet(staging)
-          })
-        }
-        // the curation report, over the PUBLISHED corpus (same derive-
-        // from-published rule): one-row sketch statistics plus the
-        // long-form (lang, source) composition — counts and token totals
-        // from one low-cardinality map-side-combinable aggregation
-        if (stats) publishStats(spark, output)
-        // optional at-rest gate index: the (b, v)-bucketed band-index
-        // table the STREAMING twin loads via --index-table — derived from
-        // the PUBLISHED parquet (so it can never diverge from the corpus
-        // it describes, same rule as the jsonl mirror). saveAsTable
-        // overwrite is drop-and-recreate, not a swap: the only reader is
-        // a gate at STARTUP, and a failed write is healed by rerunning —
-        // never by serving a half-written index mid-stream.
-        // one re-shingle pass over the published corpus feeds every text
-        // at-rest artifact that reads it: the (b,v)-bucketed band index,
-        // the doc_id-bucketed shingle table (the gate's probe and verify
-        // sides) — and the split-leakage audit's pair producer
-        if (publishIndex.nonEmpty || publishShingles.nonEmpty ||
-            auditSplits.nonEmpty) {
-          val pubSh = DedupOps.shingledOf(
-            spark.read.parquet(s"$output/corpus")
-              .repartition(spark.sparkContext.defaultParallelism,
-                col("doc_id"))).persist()
-          try {
-            publishIndex.foreach(DedupOps.writeCorpusBandIndex(pubSh, _))
-            publishShingles.foreach(DedupOps.writeCorpusShingles(pubSh, _))
-            // --audit-splits: the eval-hygiene audit run over what the
-            // run just SHIPPED (q113/q115 as a stage). The dedup stage
-            // collapses near-dups at ITS threshold regardless of split,
-            // so pairs above it cannot reach publication — what this
-            // audit catches is the band BELOW it (near-misses that still
-            // leak eval signal; the audit threshold is typically lower)
-            // and any banding-recall gap. Evidence first, then its
-            // rendering: split_leakage/ is q113's cross-split pair list
-            // over the published corpus, split_leakage_report/ is q115's
-            // per-(split_a, split_b) summary derived from the PUBLISHED
-            // pair evidence (evidence-then-read-back, like every audit).
-            auditSplits.foreach { t =>
-              Warehouse.replaceDir(
-                DedupOps.crossSplitPairs(DedupOps.minhashNearDup(pubSh, t),
-                    splitCuts._1, splitCuts._2)
-                  .select(col("doc_a"), col("doc_b"), col("split_a"),
-                    col("split_b"), col("jaccard")),
-                s"$output/split_leakage")
-              publishSplitReport(spark, output)
-            }
-          } finally { pubSh.unpersist(); () }
-        }
-        // the vector-space twins: over the PUBLISHED survivors' prepped
-        // (vec_id, e, nrm) rows — what the streaming twin loads via
-        // --vector-index-table / --vectors-table, same
-        // derive-from-published rule as above. publish-vectors buckets by
-        // vec_id so the gate's verification join never reshuffles the
-        // vectors side — and never has to persist the whole table either
-        // (GateState persistVectors = false).
-        if (publishVectorIndex.nonEmpty || publishVectors.nonEmpty) {
-          val prepped = VectorSim.prepped(spark.read.parquet(embeddings.get))
-            .join(spark.read.parquet(s"$output/corpus")
-              .select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-          publishVectorIndex.foreach(VectorOps.writeVectorBandIndex(prepped, _))
-          publishVectors.foreach(Warehouse.writeBucketed(prepped, _, "vec_id"))
-        }
-      } finally { pairs.unpersist(); () }
-    } finally { shAll.unpersist(); () }
+      Staged.release(pubSh)
+    }
+    // the vector-space twins: over the PUBLISHED survivors' prepped
+    // (vec_id, e, nrm) rows — what the streaming twin loads via
+    // --vector-index-table / --vectors-table, same
+    // derive-from-published rule as above. publish-vectors buckets by
+    // vec_id so the gate's verification join never reshuffles the
+    // vectors side — and never has to persist the whole table either
+    // (GateState persistVectors = false).
+    if (publishVectorIndex.nonEmpty || publishVectors.nonEmpty) {
+      val prepped = VectorSim.prepped(spark.read.parquet(embeddings.get))
+        .join(spark.read.parquet(s"$output/corpus")
+          .select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
+      publishVectorIndex.foreach(VectorOps.writeVectorBandIndex(prepped, _))
+      publishVectors.foreach(Warehouse.writeBucketed(prepped, _, "vec_id"))
+    }
   }
 }

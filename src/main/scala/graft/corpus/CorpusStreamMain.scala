@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.VectorSim
+import graft.ops.{Staged, VectorSim}
 import graft.queries.{DedupOps, TextOps, VectorOps}
 import graft.sources.{Jsonl, Warehouse}
 
@@ -205,9 +205,10 @@ object CorpusStreamMain {
     // Unlike vectorGate, this transform carries no per-batch state and
     // no replay asymmetry: pure stateless decontamination, q111 per
     // batch, applied INSIDE curateBatch at the batch twin's exact
-    // position (after the shingle pass, before any dedup).
-    val semBench = semanticBench.map(_.persist())
-    val semIdx = semBench.map(b => VectorOps.vectorBandIndex(b).persist())
+    // position (after the shingle pass, before any dedup). Held by the
+    // state's owner, so `state.close()` releases them with the gate.
+    val semBench = semanticBench.map(state.owner.persist(_))
+    val semIdx = semBench.map(b => state.owner.persist(VectorOps.vectorBandIndex(b)))
     val semanticDrop = semBench.map { bench => (docs: DataFrame) =>
       val incVecs = state.vectorsSource.get.join(
         docs.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
@@ -238,7 +239,9 @@ object CorpusStreamMain {
     }
     incoming.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
+      // one scope per batch: what the batch stages (component rounds,
+      // pair sets) is released once it is published and absorbed
+      .foreachBatch { (b: DataFrame, id: Long) => Staged.scope {
         val docs = decode.fold(b)(d => d(b, id))
         val ids = docs.select("doc_id")
         val curated = state.vectorGate(
@@ -252,7 +255,7 @@ object CorpusStreamMain {
         // also severs lineage back to the stream source
         state.absorb(id, b.sparkSession.read
           .parquet(s"$output/batch=$id").select("doc_id", "text"))
-      }
+      } }
       .start()
   }
 
@@ -495,8 +498,8 @@ object CorpusStreamMain {
       // the DISTINCT exploded shingle set is what contamination joins on:
       // persist that, so each micro-batch reuses the built set instead of
       // re-paying explode + distinct (+ the broadcast build) forever
-      val benchSet = args.get("bench").map(b => DedupOps.benchShingleSet(
-        DedupOps.shingledOf(spark.read.parquet(b))).persist())
+      val benchSet = args.get("bench").map(b => state.owner.persist(
+        DedupOps.benchShingleSet(DedupOps.shingledOf(spark.read.parquet(b)))))
       // ingest schema = the corpus's CONTENT columns (the crawl shape),
       // never the published bookkeeping — for jsonl it is also the locked
       // from_json schema (inference over a stream is impossible anyway)

@@ -1,11 +1,10 @@
 package graft.corpus
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Checkpoints
+import graft.ops.Staged
 import graft.queries.{DedupOps, VectorOps}
 import graft.sources.Warehouse
 
@@ -75,7 +74,7 @@ final class GateState private (
     private var absIdx: DataFrame,
     private var absVecIdx: Option[DataFrame],
     private var absorbedBatches: Set[Long],
-    private var absBlocks: Seq[RDD[_]]) {
+    private[corpus] val owner: Staged) {
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[GateState])
 
@@ -150,22 +149,21 @@ final class GateState private (
   def absorb(batchId: Long, published: DataFrame): Unit = {
     if (!absorbedBatches(batchId)) {
       val freshSh = DedupOps.shingledOf(published)
-      val newSh = absSh.unionByName(freshSh).localCheckpoint(true)
-      val newIdx = absIdx.unionByName(DedupOps.corpusBandIndex(freshSh))
-        .localCheckpoint(true)
+      val newSh = owner.checkpoint(absSh.unionByName(freshSh), eager = true)
+      val newIdx = owner.checkpoint(
+        absIdx.unionByName(DedupOps.corpusBandIndex(freshSh)), eager = true)
       val newVecIdx = vecSide.map { case (vecs, _, _) =>
-        absVecIdx.get.unionByName(VectorOps.vectorBandIndex(vecs.join(
-            published.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")))
-          .localCheckpoint(true)
+        owner.checkpoint(absVecIdx.get.unionByName(VectorOps.vectorBandIndex(vecs.join(
+            published.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"))),
+          eager = true)
       }
       // the new generation is self-contained — the previous one's blocks
       // are dead weight and released NOW, not left to the ContextCleaner
-      absBlocks.foreach(_.unpersist(false))
+      owner.release(Seq(absSh, absIdx) ++ absVecIdx: _*)
       absSh = newSh
       absIdx = newIdx
       absVecIdx = newVecIdx
       absorbedBatches += batchId
-      absBlocks = (Seq(newSh, newIdx) ++ newVecIdx).flatMap(Checkpoints.rddsOf)
       val s = absorbedStats()
       log.info(s"gate absorbed batch=$batchId: batches=${s.batches} " +
         s"shingleRows=${s.shingleRows} indexRows=${s.indexRows} " +
@@ -180,21 +178,16 @@ final class GateState private (
     * and an operator alerts on. Row counts scan the checkpointed blocks;
     * bytes come from the block manager's storage report (no job). */
   def absorbedStats(): GateStats = {
-    val ids = absBlocks.map(_.id).toSet
+    val ids = (Seq(absSh, absIdx) ++ absVecIdx).flatMap(Staged.rddsOf).map(_.id).toSet
     val stored = absSh.sparkSession.sparkContext.getRDDStorageInfo
       .filter(i => ids(i.id)).map(i => i.memSize + i.diskSize).sum
     GateStats(absorbedBatches.size, absSh.count(), absIdx.count(),
       absVecIdx.map(_.count()), stored)
   }
 
-  /** Release every block this state holds (base + absorbed + the vectors
-    * persist). The state is unusable afterwards. */
-  def close(): Unit = {
-    (Seq(baseSh, baseIdx) ++ vecSide.map(_._3)).flatMap(Checkpoints.rddsOf)
-      .foreach(_.unpersist(false))
-    absBlocks.foreach(_.unpersist(false))
-    vecSide.foreach { case (vecs, _, _) => vecs.unpersist(); () }
-  }
+  /** Release every block this state and its stream staged (base,
+    * absorbed, the vectors persist). The state is unusable afterwards. */
+  def close(): Unit = owner.close()
 }
 
 object GateState {
@@ -221,6 +214,7 @@ object GateState {
       baseShingles: Option[DataFrame] = None,
       baseVecIndex: Option[DataFrame] = None,
       persistVectors: Boolean = true): GateState = {
+    val owner = new Staged
     // a prebuilt vector index with no vector side would be silently
     // ignored — the same config bug the mains' orphan-flag rule catches
     require(baseVecIndex.isEmpty || vectors.nonEmpty,
@@ -236,9 +230,9 @@ object GateState {
     // at-rest path (baseShingles) is untouched: its bucketed layout IS
     // the point.
     val baseSh = baseShingles.getOrElse(
-      DedupOps.shingledOf(corpus.repartition(
+      owner.checkpoint(DedupOps.shingledOf(corpus.repartition(
         corpus.sparkSession.sparkContext.defaultParallelism,
-        org.apache.spark.sql.functions.col("doc_id"))).localCheckpoint(true))
+        org.apache.spark.sql.functions.col("doc_id"))), eager = true))
     // `baseIndex`: the corpus band index AT REST — the (b, v)-bucketed
     // table [[DedupOps.writeCorpusBandIndex]] wrote. Passing it skips the
     // startup 8-hash fold over the corpus AND keeps the probe join
@@ -248,10 +242,10 @@ object GateState {
     // compacted back into the table by [[compactState]] and at every
     // corpus republish.
     val baseIdx = baseIndex.getOrElse(
-      DedupOps.corpusBandIndex(baseSh).localCheckpoint(true))
+      owner.checkpoint(DedupOps.corpusBandIndex(baseSh), eager = true))
     val seed = published.getOrElse(corpus.limit(0))
-    val absSh = DedupOps.shingledOf(seed).localCheckpoint(true)
-    val absIdx = DedupOps.corpusBandIndex(absSh).localCheckpoint(true)
+    val absSh = owner.checkpoint(DedupOps.shingledOf(seed), eager = true)
+    val absIdx = owner.checkpoint(DedupOps.corpusBandIndex(absSh), eager = true)
     val vecSide = vectors.map { case (vecsRaw, threshold) =>
       // persisted because every batch scans it twice (incoming lookup +
       // candidate verification). At corpus scale persisting the WHOLE
@@ -260,7 +254,7 @@ object GateState {
       // (CorpusMain --publish-vectors / stream --vectors-table): both
       // per-batch joins then probe the at-rest layout, the same move
       // corpusBandIndex makes at rest.
-      val vecs = if (persistVectors) vecsRaw.persist() else vecsRaw
+      val vecs = if (persistVectors) owner.persist(vecsRaw) else vecsRaw
       // `baseVecIndex`: the vector band index AT REST — the (b, v)-bucketed
       // table [[VectorOps.writeVectorBandIndex]] wrote. Same contract as
       // `baseIndex` on the text side: skips the startup hyperplane fold
@@ -268,19 +262,18 @@ object GateState {
       // exchange-free on the index side (used as-is — checkpointing would
       // destroy the bucketed layout).
       val baseVecIdx = baseVecIndex.getOrElse(
-        VectorOps.vectorBandIndex(vecs.join(
-            corpus.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"))
-          .localCheckpoint(true))
+        owner.checkpoint(VectorOps.vectorBandIndex(vecs.join(
+            corpus.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")),
+          eager = true))
       (vecs, threshold, baseVecIdx)
     }
     val absVecIdx = vecSide.map { case (vecs, _, _) =>
-      VectorOps.vectorBandIndex(vecs.join(
-          seed.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"))
-        .localCheckpoint(true)
+      owner.checkpoint(VectorOps.vectorBandIndex(vecs.join(
+          seed.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")),
+        eager = true)
     }
     new GateState(baseSh, baseIdx, vecSide, absSh, absIdx, absVecIdx,
-      absorbedBatchIds,
-      (Seq(absSh, absIdx) ++ absVecIdx).flatMap(Checkpoints.rddsOf))
+      absorbedBatchIds, owner)
   }
 
   /** [[build]] for a (re)starting stream: heal any interrupted swap under

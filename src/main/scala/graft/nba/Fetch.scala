@@ -3,6 +3,7 @@ package graft.nba
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.Staged
 import graft.schema.Schemas
 import graft.sources.{Endpoints, FetchAll, Fetcher, RestDecoder, Warehouse}
 
@@ -130,17 +131,17 @@ object Fetch {
   /** Fetch + decode + land `<input>/<table>_raw` (plus a
     * `<table>_fetch_errors` quarantine — T4: a dead game id costs one error
     * row, not the run, reference rotations.py:136-137). Returns the landed
-    * raw frame. */
+    * raw frame. The fetch results are staged in a [[Staged.scope]] that
+    * ends with the landing. */
   def landRaw(table: String, args: PipelineArgs.Args,
       transport: Fetcher.Transport)(
-      implicit spark: SparkSession): DataFrame = {
+      implicit spark: SparkSession): DataFrame = Staged.scope {
     import spark.implicits._
-    // persist: the landing has several consumers (the header probe in
+    // staged: the landing has several consumers (the header probe in
     // resultSet, the quarantine write, the raw write) — without staging the
     // fetch results, each action would RE-ISSUE every HTTP request
-    val fetched = FetchAll.fetchRaw(requestsFor(table, args, transport), transport)
-      .persist()
-    try {
+    val fetched = Staged.persist(
+      FetchAll.fetchRaw(requestsFor(table, args, transport), transport))
     // land the quarantine FIRST: decoding probes the result-set headers
     // eagerly, and a run whose every fetch failed dies there — the
     // per-request error rows must already be on disk when it does, or the
@@ -165,10 +166,6 @@ object Fetch {
     }
     Warehouse.replaceDir(raw, s"${args.input}/${table}_raw")
     spark.read.parquet(s"${args.input}/${table}_raw")
-    } finally {
-      fetched.unpersist()
-      ()
-    }
   }
 
   /** Result-set name + landed shape of the period-sliced box score
@@ -187,56 +184,52 @@ object Fetch {
     * the request params via the TAGGED decode — the response rows carry
     * the game but not the slice that produced them. The starters ETL's
     * fetch half (reference players_on_court_at_start_of_period.py:42-58,
-    * fetched per game inside the loop; here one distributed fan-out). */
+    * fetched per game inside the loop; here one distributed fan-out).
+    * Staged like [[landRaw]]'s fetch. */
   def landBoxScores(gamePeriods: DataFrame, args: PipelineArgs.Args,
       transport: Fetcher.Transport)(
-      implicit spark: SparkSession): DataFrame = {
+      implicit spark: SparkSession): DataFrame = Staged.scope {
     import spark.implicits._
     val requests = gamePeriods
       .select(col("GAME_ID"), col("PERIOD")).distinct()
       .as[(String, Int)]
       .map { case (g, p) => Endpoints.boxScoreForPeriod(g, p) }
-    val fetched = FetchAll.fetchRaw(requests, transport).persist()
-    try {
-      landErrors(fetched, s"${args.input}/${BoxTable}_fetch_errors")
-      val tagged = fetched
-        .flatMap(f => f.body.map(b => (f.params.toMap, b)))
-        .toDF("params", "body")
-      // a delta run with nothing new fans out zero requests — land the
-      // empty table instead of dying on the header probe
-      val raw =
-        if (tagged.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], boxRaw)
-        else
-          RestDecoder.resultSet(
-              RestDecoder.parseTagged(tagged), BoxPlayerSet, keep = Seq("params"))
-            .select(
-              col("GAME_ID").cast("string").as("GAME_ID"),
-              element_at(col("params"), "startPeriod").cast("int").as("PERIOD"),
-              col("PLAYER_ID").cast("long").as("PLAYER_ID"),
-              col("TEAM_ID").cast("long").as("TEAM_ID"),
-              col("MIN").cast("string").as("MIN"))
-      // MERGE with whatever is already landed: this run's slices replace
-      // their (game, period) pairs, every other pair is kept — a delta run
-      // fetching 5 new games (or an outage where every fetch failed and
-      // `raw` is empty) must not destroy the 1000 games a previous run
-      // landed, because transport-less StartersMain reruns read this table
-      // as their primary path
-      val dir = s"${args.input}/$BoxTable"
-      Warehouse.recover(spark, dir)
-      val merged = scala.util.Try(spark.read.parquet(dir)).toOption match {
-        case Some(existing) =>
-          val keys = raw.select(col("GAME_ID"), col("PERIOD")).distinct()
-          existing.join(keys, Seq("GAME_ID", "PERIOD"), "left_anti").unionByName(raw)
-        case None => raw
-      }
-      Warehouse.replaceDir(merged, dir)
-      spark.read.parquet(dir)
-    } finally {
-      fetched.unpersist()
-      ()
+    val fetched = Staged.persist(FetchAll.fetchRaw(requests, transport))
+    landErrors(fetched, s"${args.input}/${BoxTable}_fetch_errors")
+    val tagged = fetched
+      .flatMap(f => f.body.map(b => (f.params.toMap, b)))
+      .toDF("params", "body")
+    // a delta run with nothing new fans out zero requests — land the
+    // empty table instead of dying on the header probe
+    val raw =
+      if (tagged.isEmpty)
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], boxRaw)
+      else
+        RestDecoder.resultSet(
+            RestDecoder.parseTagged(tagged), BoxPlayerSet, keep = Seq("params"))
+          .select(
+            col("GAME_ID").cast("string").as("GAME_ID"),
+            element_at(col("params"), "startPeriod").cast("int").as("PERIOD"),
+            col("PLAYER_ID").cast("long").as("PLAYER_ID"),
+            col("TEAM_ID").cast("long").as("TEAM_ID"),
+            col("MIN").cast("string").as("MIN"))
+    // MERGE with whatever is already landed: this run's slices replace
+    // their (game, period) pairs, every other pair is kept — a delta run
+    // fetching 5 new games (or an outage where every fetch failed and
+    // `raw` is empty) must not destroy the 1000 games a previous run
+    // landed, because transport-less StartersMain reruns read this table
+    // as their primary path
+    val dir = s"${args.input}/$BoxTable"
+    Warehouse.recover(spark, dir)
+    val merged = Warehouse.readIfPresent(spark, dir) match {
+      case Some(existing) =>
+        val keys = raw.select(col("GAME_ID"), col("PERIOD")).distinct()
+        existing.join(keys, Seq("GAME_ID", "PERIOD"), "left_anti").unionByName(raw)
+      case None => raw
     }
+    Warehouse.replaceDir(merged, dir)
+    spark.read.parquet(dir)
   }
 
   private def landErrors(fetched: org.apache.spark.sql.Dataset[FetchAll.Fetched],

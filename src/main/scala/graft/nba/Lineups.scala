@@ -46,8 +46,9 @@ case class GameError(GAME_ID: String, error: String)
   *     with IN == t*10; if that doesn't yield exactly 5, fall back to the
   *     period-starters table (:100-111,141-152);
   *   - emit the post-update lineups for every event, sorted ascending;
-  *   - per-game failures are logged and skipped, like the reference's
-  *     try/except-per-game (:219-225), unless failFast.
+  *   - a game that fails, where the reference's try/except-per-game
+  *     (:219-225) logs and skips it, lands as one row in the error
+  *     channel.
   *
   * Execution: games are independent, so the scan is a `cogroup` on GAME_ID —
   * one exchange per side, O(game) memory per group, executors replace the
@@ -84,17 +85,15 @@ object Lineups {
   private val RequiredEventCols =
     Seq("EVENTNUM", "EVENTMSGTYPE", "EVENTMSGACTIONTYPE", "PERIOD", "SECONDS_FROM_START")
 
-  /** Shared input prep for both cogroup variants — ONE definition of the
-    * PbpEvent column list and the side-input union, so the pipeline and
-    * quarantine paths cannot read different event shapes. Returns the
-    * typed CLEAN events (games with a required-null row excluded), the
-    * undecodable game ids, and the side inputs. */
+  /** Input prep for the lineup cogroup: the PbpEvent column list and the
+    * side-input union. Returns the typed CLEAN events (games with a
+    * required-null row excluded), the undecodable game ids, and the side
+    * inputs. */
   private def prepare(
       pbp: DataFrame,
       rotations: DataFrame,
       starters: Option[DataFrame],
-      teamGameLog: Option[DataFrame],
-      sanitize: Boolean)(
+      teamGameLog: Option[DataFrame])(
       implicit spark: SparkSession):
       (Dataset[PbpEvent], Dataset[String], Dataset[GameSide]) = {
     import spark.implicits._
@@ -110,18 +109,9 @@ object Lineups {
         RequiredEventCols.map(col(_).isNull).reduce(_ || _))
       .select(coalesce(col("GAME_ID"), lit("<null GAME_ID>")).as("GAME_ID"))
       .distinct().as[String]
-    val base =
-      if (sanitize)
-        // quarantine path: undecodable games are split off so the encoder
-        // never sees them
-        withSfs.filter(col("GAME_ID").isNotNull)
-          .join(badGames.toDF("GAME_ID"), Seq("GAME_ID"), "left_anti")
-      else
-        // fail-fast path: left unsanitized ON PURPOSE so the encoder's
-        // non-null violation aborts the job at action time (lazy — no job
-        // runs at plan construction)
-        withSfs
-    val ev = base
+    // undecodable games are split off so the encoder never sees them
+    val ev = withSfs.filter(col("GAME_ID").isNotNull)
+      .join(badGames.toDF("GAME_ID"), Seq("GAME_ID"), "left_anti")
       .select(col("GAME_ID"), col("EVENTNUM"), col("EVENTMSGTYPE"),
         col("EVENTMSGACTIONTYPE"), col("PERIOD"), col("PCTIMESTRING"),
         col("SECONDS_FROM_START"), col("PLAYER1_ID"), col("PLAYER1_TEAM_ID"),
@@ -142,48 +132,21 @@ object Lineups {
       else processGame(gid, events, sideIt.toArray).toVector
     }
 
-  def withPlayers(
-      pbp: DataFrame,
-      rotations: DataFrame,
-      starters: Option[DataFrame] = None,
-      teamGameLog: Option[DataFrame] = None,
-      failFast: Boolean = false)(implicit spark: SparkSession): Dataset[PbpWithPlayers] = {
-    import spark.implicits._
-    // with failFast off, undecodable games are simply absent from the
-    // output (log-and-continue semantics; withPlayersAndErrors lands them
-    // in the quarantine channel instead); with failFast on the events stay
-    // unsanitized so the encoder's violation aborts at action time
-    val (ev, _, side) =
-      prepare(pbp, rotations, starters, teamGameLog, sanitize = !failFast)
-    ev.groupByKey(_.GAME_ID).cogroup(side.groupByKey(_.GAME_ID)) { (gid, evIt, sideIt) =>
-      runGame(gid, evIt, sideIt) match {
-        case Success(rows) => rows.iterator
-        case Failure(e) if !failFast =>
-          // reference logs and continues (:223-225)
-          System.err.println(s"[lineups] failed for game $gid: ${e.getMessage}")
-          Iterator.empty
-        case Failure(e) => throw e
-      }
-    }
-  }
-
-  /** T4 quarantine variant: one pass, rows and per-game errors as separate
-    * datasets (the union is persisted once; both sides filter it). The
-    * third element releases that cache — call it once both datasets have
-    * been consumed, or the blocks stay pinned for the session. */
+  /** Lineup tracking with the T4 quarantine: one pass, rows and per-game
+    * errors as separate datasets. A game that fails is not dropped: it is
+    * one row in the error channel. The outcomes both sides filter are
+    * staged once; see [[graft.ops.Staged]] for their release. */
   def withPlayersAndErrors(
       pbp: DataFrame,
       rotations: DataFrame,
       starters: Option[DataFrame] = None,
       teamGameLog: Option[DataFrame] = None)(
-      implicit spark: SparkSession):
-      (Dataset[PbpWithPlayers], Dataset[GameError], () => Unit) = {
+      implicit spark: SparkSession): (Dataset[PbpWithPlayers], Dataset[GameError]) = {
     import spark.implicits._
-    val (ev, badGames, side) =
-      prepare(pbp, rotations, starters, teamGameLog, sanitize = true)
+    val (ev, badGames, side) = prepare(pbp, rotations, starters, teamGameLog)
     val decodeErrors = badGames.map(g => GameError(g,
       s"undecodable play-by-play: null in one of ${RequiredEventCols.mkString("/")}"))
-    val outcomes = ev.groupByKey(_.GAME_ID)
+    val outcomes = graft.ops.Staged.persist(ev.groupByKey(_.GAME_ID)
       .cogroup(side.groupByKey(_.GAME_ID)) { (gid, evIt, sideIt) =>
         runGame(gid, evIt, sideIt) match {
           case Success(rows) => rows.iterator.map(r => (Option(r), Option.empty[GameError]))
@@ -191,10 +154,8 @@ object Lineups {
             Iterator((Option.empty[PbpWithPlayers],
               Some(GameError(gid, String.valueOf(e.getMessage)))))
         }
-      }.persist()
-    (outcomes.flatMap(_._1),
-      outcomes.flatMap(_._2).union(decodeErrors),
-      () => { outcomes.unpersist(); () })
+      })
+    (outcomes.flatMap(_._1), outcomes.flatMap(_._2).union(decodeErrors))
   }
 
   /** Resumable lineup state — also the streaming operator's GroupState

@@ -77,8 +77,10 @@ object PipelineMain {
         try runWith(spark, args) finally spark.stop()
     }
 
-  /** The job body, on a caller-owned session (testable; main owns its own). */
-  def runWith(spark0: SparkSession, args: PipelineArgs.Args): Unit = {
+  /** The job body, on a caller-owned session (testable; main owns its own).
+    * Runs in one [[graft.ops.Staged.scope]]: the staged lineup outcomes
+    * are released when the job ends, also when it fails. */
+  def runWith(spark0: SparkSession, args: PipelineArgs.Args): Unit = graft.ops.Staged.scope {
     implicit val spark: SparkSession = spark0
     import graft.functions.GameIds
     import graft.sources.Warehouse
@@ -92,10 +94,9 @@ object PipelineMain {
     val pbp = Publish.deltaOnly(
       Publish.scope(tbl("play_by_play"), args), args.delta, outDir, Seq("GAME_ID"))
 
-    val starters = scala.util.Try(tbl("players_on_court_at_start_of_period")).toOption
-    val teamLog = scala.util.Try(tbl("team_game_log")).toOption
-    val (rows, errors, release) = Lineups.withPlayersAndErrors(
-      pbp, tbl("rotations"), starters, teamLog)
+    def optional(name: String) = Warehouse.readIfPresent(spark, s"${args.input}/$name")
+    val (rows, errors) = Lineups.withPlayersAndErrors(pbp, tbl("rotations"),
+      optional("players_on_court_at_start_of_period"), optional("team_game_log"))
 
     val newRows = rows.toDF()
       .withColumn("SEASON", GameIds.extractSeason(col("GAME_ID")))
@@ -106,12 +107,11 @@ object PipelineMain {
     // run (delta or not), then add this run's failures
     val processed = pbp.select(col("GAME_ID")).distinct()
     val errDf = errors.toDF()
-    scala.util.Try(spark.read.parquet(errDir)).toOption match {
+    Warehouse.readIfPresent(spark, errDir) match {
       case Some(exErr) =>
         Warehouse.replaceDir(
           exErr.join(processed, Seq("GAME_ID"), "left_anti").unionByName(errDf), errDir)
       case None => errDf.write.mode("append").parquet(errDir)
     }
-    release() // both channels are written; free the cached outcomes
   }
 }

@@ -44,7 +44,7 @@ object Publish {
   def deltaOnly(scoped: DataFrame, delta: Boolean, outDir: String,
       keys: Seq[String])(implicit spark: SparkSession): DataFrame =
     if (!delta) scoped
-    else scala.util.Try(spark.read.parquet(outDir)).toOption match {
+    else Warehouse.readIfPresent(spark, outDir) match {
       case Some(existing) =>
         Upsert.deltaNew(existing.select(keys.map(col): _*), scoped, keys)
       case None => scoped
@@ -60,7 +60,7 @@ object Publish {
       newRows.write.mode("append")
         .partitionBy(Warehouse.PartitionCols: _*).parquet(outDir)
     else {
-      val merged = scala.util.Try(spark.read.parquet(outDir)).toOption match {
+      val merged = Warehouse.readIfPresent(spark, outDir) match {
         case Some(ex) =>
           // merge only the partitions this run recomputes; the semi-join on
           // the partition columns prunes the rest of the warehouse

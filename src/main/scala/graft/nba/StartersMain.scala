@@ -66,9 +66,10 @@ object StartersMain {
     val box: DataFrame = transport match {
       case Some(t) =>
         Fetch.landBoxScores(pbp.select(col("GAME_ID"), col("PERIOD")), args, t)
-      case None => scala.util.Try(tbl("box_score_per_period")).toOption
-        .getOrElse(Seq.empty[(String, Int, Long, Long, Option[Double])]
-          .toDF("GAME_ID", "PERIOD", "PLAYER_ID", "TEAM_ID", "MIN"))
+      case None =>
+        graft.sources.Warehouse.readIfPresent(spark, s"${args.input}/box_score_per_period")
+          .getOrElse(Seq.empty[(String, Int, Long, Long, Option[Double])]
+            .toDF("GAME_ID", "PERIOD", "PLAYER_ID", "TEAM_ID", "MIN"))
     }
     val boxScoped = box.join(
       pbp.select(col("GAME_ID")).distinct(), Seq("GAME_ID"), "left_semi")

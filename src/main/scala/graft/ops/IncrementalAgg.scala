@@ -146,14 +146,11 @@ object IncrementalAgg {
     * (and inverts the min direction's negation) — or compact its feed
     * to net events per row first.
     *
-    * Block-release contract: the merged (MV-sized) frame is lazily
-    * localCheckpoint'ed so it evaluates ONCE per refresh instead of once
-    * per downstream reference; the blocks pin at the first action on the
-    * returned frame and stay pinned until released. A one-shot caller
-    * can ignore this (session teardown frees them); a caller refreshing
-    * in a loop must release after consuming each result —
-    * `graft.ops.Checkpoints.rddsOf(result).foreach(_.unpersist(false))`
-    * — exactly what [[maintainExtremaBatch]] does per trigger. */
+    * The merged (MV-sized) frame is a lazy staged checkpoint, so it
+    * evaluates ONCE per refresh instead of once per downstream reference;
+    * its blocks pin at the first action on the returned frame and are
+    * released as [[Staged]] states — [[maintainExtremaBatch]] scopes each
+    * trigger. */
   def maintainExtrema(mv: DataFrame, cdc: DataFrame, base: DataFrame,
       keyCols: Seq[String], valueCol: String = "v",
       countCol: String = "n_rows", sumCol: String = "sum_value",
@@ -182,16 +179,15 @@ object IncrementalAgg {
       .agg(sum(dCount).as("_d_count"), sum(dSum).as("_d_sum"),
         min(arriving).as("_ins_min"), max(arriving).as("_ins_max"),
         min(departing).as("_dep_min"), max(departing).as("_dep_max"))
-    // materialized ONCE (lazy localCheckpoint, components()' block
+    // materialized ONCE (lazy checkpoint, components()' block
     // discipline): the merge is referenced below by both the at-risk key
     // projection (feeding the semi join) and the final repair join —
     // without materialization Spark re-evaluates the O(|delta|+|MV|)
     // full-outer join per reference, so the merge actually ran ~3x per
     // refresh at MV scale (the r11 advisory). LAZY (eager = false) so
     // building the plan stays side-effect-free (explain costs nothing);
-    // the blocks pin at the first action — see the scaladoc's release
-    // contract ([[maintainExtremaBatch]] honors it per trigger).
-    val merged = mv.join(delta, keyCols, "full_outer")
+    // the blocks pin at the first action.
+    val merged = Staged.checkpoint(mv.join(delta, keyCols, "full_outer")
       .select(keyCols.map(col) ++ Seq(
         (coalesce(col(countCol), lit(0L)) + coalesce(col("_d_count"), lit(0L)))
           .as(countCol),
@@ -208,8 +204,7 @@ object IncrementalAgg {
         (col("_dep_max").isNotNull &&
           (col(maxCol).isNull || col("_dep_max") >= col(maxCol)))
           .as("_risk_max")): _*)
-      .filter(col(countCol) =!= 0)
-      .localCheckpoint(false)
+      .filter(col(countCol) =!= 0), eager = false)
     val recomputed = base
       .join(merged.filter(col("_risk_min") || col("_risk_max"))
         .select(keyCols.map(col): _*), keyCols, "left_semi")
@@ -435,12 +430,9 @@ object IncrementalAgg {
     // both the anti and semi joins, and without materialization each
     // reference re-evaluates the MV-sized semi probe — one extra full MV
     // scan per refresh (the exact repeated-evaluation cost the r11
-    // advisory fixed in maintainExtrema). Blocks are released per
-    // trigger by foldExactlyOnce's rddsOf sweep (maintainTopKBatch);
-    // one-shot callers can leave them to session teardown.
-    val atRisk = mv.join(touched, keyAndId, "left_semi")
-      .select(keyCols.map(col): _*).distinct()
-      .localCheckpoint(false)
+    // advisory fixed in maintainExtrema).
+    val atRisk = Staged.checkpoint(mv.join(touched, keyAndId, "left_semi")
+      .select(keyCols.map(col): _*).distinct(), eager = false)
     val arriving = checked.filter(col("_op") =!= "delete")
       .select(keyCols.map(col) ++ Seq(col(idCol),
         col("new_value").cast("double").as(valueCol)): _*)
@@ -566,8 +558,9 @@ object IncrementalAgg {
     * (marker encoding, recover ordering, swap rules) cannot land in one
     * fold and miss the others. A crash between the maintain and the
     * swap leaves the old table + old marker — the replay re-applies
-    * cleanly. Any localCheckpoint blocks the maintained frame pinned are
-    * released after the publish (no-op for the checkpoint-free folds).
+    * cleanly. The maintain and its publish run in one [[Staged.scope]],
+    * so any blocks the maintained frame staged are released after the
+    * publish.
     *
     * Bootstrap semantics: `bootstrap` is the EMPTY view, which is
     * correct when the CDC stream replays the base's history from its
@@ -604,18 +597,15 @@ object IncrementalAgg {
     if (batchId <= applied) return // replayed micro-batch: already folded
     // exists-but-no-visible-data = erasure-emptied view (see the
     // emptied-dir rule above): fold as empty, never schema-infer
-    val cur =
-      if (fs.exists(p) && graft.sources.Warehouse.dirHasVisibleData(fs, p))
-        spark.read.parquet(dir)
-      else bootstrap
-    val out = next(cur)
-    try graft.sources.Warehouse.replaceDirWith(spark, dir) { staging =>
-      out.write.parquet(staging)
-      val w = fs.create(
-        new org.apache.hadoop.fs.Path(staging, AppliedMarker), true)
-      try w.write(batchId.toString.getBytes("UTF-8")) finally w.close()
-    } finally {
-      graft.ops.Checkpoints.rddsOf(out).foreach(_.unpersist(false))
+    val cur = graft.sources.Warehouse.readIfPresent(spark, dir).getOrElse(bootstrap)
+    Staged.scope {
+      val out = next(cur)
+      graft.sources.Warehouse.replaceDirWith(spark, dir) { staging =>
+        out.write.parquet(staging)
+        val w = fs.create(
+          new org.apache.hadoop.fs.Path(staging, AppliedMarker), true)
+        try w.write(batchId.toString.getBytes("UTF-8")) finally w.close()
+      }
     }
   }
 

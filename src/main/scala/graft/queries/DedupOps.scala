@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.ops.Shingles
+import graft.ops.{Shingles, Staged}
 import graft.expressions.BloomMightContain
 
 /** Near-duplicate detection suite over `documents` — the dedup passes of a
@@ -52,13 +52,7 @@ object DedupOps {
     * once" (cache or a temp parquet), which is how a 100 TB dedup pass is
     * structured anyway.
     *
-    * Cache lifecycle: Spark's CacheManager keys entries by analyzed plan,
-    * so every query over the same `dir` shares ONE cache entry (re-persist
-    * of a cached plan is a no-op) — a session running q31 -> q33 holds one
-    * shingle table's blocks per distinct dir, and interleaved dedup passes
-    * over different dirs each keep theirs. The caller owns release:
-    * `spark.catalog.clearCache()` (the bench does, between queries, for
-    * per-query cost accounting) or `unpersist()` on any same-plan frame.
+    * Staged through [[graft.ops.Staged]], which states who releases it.
     *
     * Partitioning (r21): the staged table is hash-repartitioned by doc_id
     * to the session's parallelism BEFORE the shingling kernel. The bench
@@ -75,8 +69,8 @@ object DedupOps {
     * partition); it tracks SPARK_GRAFT_CPUS locally and executor count on
     * a real cluster. */
   private def shingled(s: SparkSession, dir: String): DataFrame =
-    shingledOf(Tables.documents(s, dir)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))).persist()
+    Staged.persist(shingledOf(Tables.documents(s, dir)
+      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))))
 
   /** doc_id + distinct word-n-gram shingles for any documents frame. */
   def shingledOf(docs: DataFrame): DataFrame =
@@ -162,13 +156,10 @@ object DedupOps {
     // whole posting-explode + per-posting-md5 + groupBy-min signature
     // pipeline — profiled as the two dominant ~equal stages of q31 at
     // sf0.1 (exchange reuse does not fire across the aliased sides).
-    // Tiny (4 rows/doc, ~40 bytes each); released by the caller's
-    // clearCache like the staged shingle table (the shared contract of
-    // this module's staged frames).
-    val bands = sig
+    // Tiny (4 rows/doc, ~40 bytes each).
+    val bands = Staged.persist(sig
       .select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.b").as("b"), col("band.v").as("v"))
-      .persist()
+      .select(col("doc_id"), col("band.b").as("b"), col("band.v").as("v")))
     val cand = bands.as("x").join(bands.as("y"),
         col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -398,7 +389,7 @@ object DedupOps {
     // stage the pair set before mirroring it: the union's two branches
     // would otherwise each recompute the full upstream pair-producing
     // pipeline (minhash/simhash/jaccard) inside the first round's job
-    val p = pairs.select(col("doc_a"), col("doc_b")).persist()
+    val p = Staged.persist(pairs.select(col("doc_a"), col("doc_b")))
     // The static edge table is hash-partitioned by src ONCE and cached
     // that way: every round's propagation join and the init groupBy both
     // key on src, so the (big, unchanging) edge side never re-shuffles —
@@ -408,9 +399,9 @@ object DedupOps {
     // a caller with heavily duplicated pair rows should dedup upstream,
     // where it's one combinable aggregation, not pay a mirror-side shuffle
     // on every clean input here.
-    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val edges = Staged.persist(p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(col("src")).persist()
+      .repartition(col("src")))
     // seed with the first propagation hop fused into init: label0 =
     // min(self, direct neighbors) — edges is already partitioned by src,
     // so this aggregation is shuffle-free (a clique converges in the init
@@ -419,74 +410,56 @@ object DedupOps {
       .groupBy(col("src").as("doc_id"))
       .agg(min(col("dst")).as("nmin"))
       .select(col("doc_id"), least(col("doc_id"), col("nmin")).as("label"))
-    // rounds must release the previous round's checkpoint blocks (see
-    // graft.ops.Checkpoints) or a deep component holds every round's full
-    // label table in memory simultaneously
-    var prevRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
     var iter = 0
     var changed = 1L
-    var ok = false
-    try {
-      while (changed > 0 && iter < maxIter) {
-        // Two shuffles per round, labels-side only: the neighbor branch
-        // joins labels to the src-partitioned edge cache (labels shuffles,
-        // edges doesn't), the self branch rides for free carrying the old
-        // label, and one groupBy folds both into min(label). min over
-        // {old, neighbors} == least(old, min(neighbors)), and every
-        // doc_id has exactly one self row, so max(old) recovers the old
-        // label for the convergence signal.
-        val nullOld = lit(null).cast(labels.schema("label").dataType).as("old")
-        val viaNeighbors = edges
-          .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
-          .select(col("dst").as("doc_id"), col("label"), nullOld)
-        // pointer jumping: also propose label(label(x)) — label(x) is a
-        // reachable node by induction, so its label is too (transitivity
-        // keeps the invariant); each round the distance to the component
-        // minimum better-than-halves
-        val viaHop =
-          if (!pointerJumping) None
-          else Some(labels.as("l1")
-            .join(labels.as("l2"), col("l1.label") === col("l2.doc_id"))
-            .select(col("l1.doc_id").as("doc_id"), col("l2.label").as("label"),
-              nullOld))
-        // ONE job per round: localCheckpoint(eager) materializes the round
-        // AND truncates lineage (a persist would keep stacking the
-        // iterative plan — analysis cost grows per round and a ~30-round
-        // chain overflows the tree-string stack), while the Observation
-        // rides the same job to deliver the convergence signal (labels
-        // only ever decrease, so `label < old` counts exactly the moves) —
-        // no second join + isEmpty probe, no extra action at all
-        val obs = org.apache.spark.sql.Observation()
-        val next = viaHop.foldLeft(
-            labels
-              .select(col("doc_id"), col("label"), col("label").as("old"))
-              .unionByName(viaNeighbors))(_ unionByName _)
-          .groupBy(col("doc_id"))
-          .agg(min(col("label")).as("label"), max(col("old")).as("old"))
-          .observe(obs, count(when(col("label") < col("old"), true)).as("changed"))
-          .select(col("doc_id"), col("label"))
-          .localCheckpoint(true)
-        changed = obs.get("changed").asInstanceOf[Long]
-        // the new checkpoint is self-contained — the previous round's
-        // blocks are dead weight and can be dropped NOW (unpersisting a
-        // locally-checkpointed RDD discards its data, which is safe
-        // exactly because nothing references the previous round anymore)
-        prevRdds.foreach(_.unpersist(false))
-        prevRdds = graft.ops.Checkpoints.rddsOf(next)
-        labels = next
-        iter += 1
-      }
-      require(changed == 0, s"components did not converge within $maxIter rounds")
-      ok = true
-      (labels, iter)
-    } finally {
-      // on failure release the last round too; on success the caller owns
-      // the returned checkpoint (ContextCleaner reaps it when dropped)
-      if (!ok) prevRdds.foreach(_.unpersist(false))
-      edges.unpersist()
-      p.unpersist()
-      ()
+    while (changed > 0 && iter < maxIter) {
+      // Two shuffles per round, labels-side only: the neighbor branch
+      // joins labels to the src-partitioned edge cache (labels shuffles,
+      // edges doesn't), the self branch rides for free carrying the old
+      // label, and one groupBy folds both into min(label). min over
+      // {old, neighbors} == least(old, min(neighbors)), and every
+      // doc_id has exactly one self row, so max(old) recovers the old
+      // label for the convergence signal.
+      val nullOld = lit(null).cast(labels.schema("label").dataType).as("old")
+      val viaNeighbors = edges
+        .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
+        .select(col("dst").as("doc_id"), col("label"), nullOld)
+      // pointer jumping: also propose label(label(x)) — label(x) is a
+      // reachable node by induction, so its label is too (transitivity
+      // keeps the invariant); each round the distance to the component
+      // minimum better-than-halves
+      val viaHop =
+        if (!pointerJumping) None
+        else Some(labels.as("l1")
+          .join(labels.as("l2"), col("l1.label") === col("l2.doc_id"))
+          .select(col("l1.doc_id").as("doc_id"), col("l2.label").as("label"),
+            nullOld))
+      // ONE job per round: the eager checkpoint materializes the round
+      // AND truncates lineage (a persist would keep stacking the
+      // iterative plan — analysis cost grows per round and a ~30-round
+      // chain overflows the tree-string stack), while the Observation
+      // rides the same job to deliver the convergence signal (labels
+      // only ever decrease, so `label < old` counts exactly the moves) —
+      // no second join + isEmpty probe, no extra action at all
+      val obs = org.apache.spark.sql.Observation()
+      val next = Staged.checkpoint(viaHop.foldLeft(
+          labels
+            .select(col("doc_id"), col("label"), col("label").as("old"))
+            .unionByName(viaNeighbors))(_ unionByName _)
+        .groupBy(col("doc_id"))
+        .agg(min(col("label")).as("label"), max(col("old")).as("old"))
+        .observe(obs, count(when(col("label") < col("old"), true)).as("changed"))
+        .select(col("doc_id"), col("label")), eager = true)
+      changed = obs.get("changed").asInstanceOf[Long]
+      // the new checkpoint is self-contained — the previous round's
+      // blocks are dead weight and can be dropped NOW
+      Staged.release(labels)
+      labels = next
+      iter += 1
     }
+    require(changed == 0, s"components did not converge within $maxIter rounds")
+    Staged.release(edges, p)
+    (labels, iter)
   }
 
   /** Connected components by alternating large-star / small-star rounds
@@ -520,99 +493,90 @@ object DedupOps {
   private[graft] def componentsStarWithRounds(pairs: DataFrame,
       maxIter: Int = 50): (DataFrame, Int) = {
     // canonical undirected edges: lo < hi, distinct (self-pairs dropped)
-    var edges = pairs.select(
+    var edges = Staged.checkpoint(pairs.select(
         least(col("doc_a"), col("doc_b")).as("lo"),
         greatest(col("doc_a"), col("doc_b")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct()
-      .localCheckpoint(true)
-    var prevRdds = graft.ops.Checkpoints.rddsOf(edges)
+      .filter(col("lo") =!= col("hi")).distinct(), eager = true)
     var iter = 0
     var done = false
-    try {
-      while (!done && iter < maxIter) {
-        // large-star: m(u) = min(u, N(u)); every v in N(u) with v > u
-        // relinks to m(u). m < v always holds, so (m, v) is canonical.
-        // The v > u half of sym is the canonical edge set itself, so the
-        // join drives off `edges` directly (one fewer union branch).
-        val sym = edges.select(col("lo").as("u"), col("hi").as("v"))
-          .unionByName(edges.select(col("hi").as("u"), col("lo").as("v")))
-        val mL = sym.groupBy(col("u")).agg(min(col("v")).as("nm"))
-          .select(col("u"), least(col("u"), col("nm")).as("m"))
-        // Convergence (r21): both star passes count their RELINKS as
-        // Observations riding the one checkpoint job — zero relinks in
-        // both passes means each pass was the identity, so next == edges
-        // exactly. This replaces the old membership test (a per-cycle
-        // left join of next against the old edge set plus a row-count
-        // compare) — one full join and its exchanges gone per cycle.
-        // Equivalence is provable, not heuristic: each pass maps every
-        // edge endpoint to a value <= itself, and a finite set mapped
-        // onto itself by a pointwise-<= function is fixed pointwise, so
-        // set-stability forces zero relinks — the two criteria stop on
-        // the SAME cycle (DedupVolumeSpec pins the cycle counts).
-        val obsL = org.apache.spark.sql.Observation()
-        val obsS = org.apache.spark.sql.Observation()
-        val large = edges.select(col("lo").as("u"), col("hi").as("v"))
-          .join(mL, "u")
-          .observe(obsL, count(when(col("m") =!= col("u"), true)).as("relinked"))
-          .select(col("m").as("lo"), col("v").as("hi"))
-        // No distinct here (r21): mS's min and the final distinct are
-        // duplicate-insensitive, and the relink observations only test
-        // zero-ness — collapsing large early bought nothing but one more
-        // exchange per cycle.
-        // small-star keyed at the larger endpoint: m = min of the smaller
-        // neighbors (always < hi); the node and its other small neighbors
-        // relink to m
-        val mS = large.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-        // No distinct on the cycle output (r22): min-aggregation and the
-        // relink observations are duplicate-insensitive (min over a
-        // multiset equals min over its set; zero relinks on copies ⟺
-        // zero on the set), the underlying edge SET evolves identically
-        // cycle-for-cycle, and the final labeling below already dedups —
-        // so the per-cycle distinct bought exact nothing but one full
-        // edge-set exchange + materialization per cycle (guide §2.4:
-        // a distinct on data whose consumers are duplicate-insensitive).
-        // Duplicate growth is bounded: each cycle adds at most one mS row
-        // per hi-node, so the multiset stays O(|edges| + cycles·|nodes|).
-        // The stop cycle is unchanged (DedupVolumeSpec pins the counts).
-        val next = large.join(mS, "hi")
-          .observe(obsS, count(when(col("lo") =!= col("m"), true)).as("relinked"))
-          .filter(col("lo") =!= col("m"))
-          .select(col("m").as("lo"), col("lo").as("hi"))
-          .unionByName(mS.select(col("m").as("lo"), col("hi")))
-          .localCheckpoint(true)
-        // An ABSENT metric means AQE's runtime empty-relation propagation
-        // replaced the observed subtree (mid-plan CollectMetrics nodes
-        // are pruned with it): provably zero rows, hence zero relinks —
-        // the converged-empty-graph case (dedupeCorpus over a pair-free
-        // batch hits this on its first cycle).
-        def relinks(o: org.apache.spark.sql.Observation): Long =
-          o.get.get("relinked") match {
-            case Some(n) => n.asInstanceOf[Long]
-            case None =>
-              // r22 (ADVICE): make the pruned-metric fallback visible —
-              // today its only cause is the provably-zero-rows case
-              // above, but a future cause would otherwise silently
-              // declare convergence with under-merged components.
-              System.err.println(
-                "[componentsStar] 'relinked' metric absent (AQE " +
-                  "empty-relation pruning): treating as 0 relinks")
-              0L
-          }
-        done = relinks(obsL) == 0L && relinks(obsS) == 0L
-        prevRdds.foreach(_.unpersist(false))
-        prevRdds = graft.ops.Checkpoints.rddsOf(next)
-        edges = next
-        iter += 1
-      }
-      require(done, s"componentsStar did not converge within $maxIter cycles")
-      edges.select(col("hi").as("doc_id"), col("lo").as("label"))
-        .unionByName(
-          edges.select(col("lo").as("doc_id"), col("lo").as("label")))
-        .distinct() -> iter
-    } catch { case t: Throwable =>
-      prevRdds.foreach(_.unpersist(false))
-      throw t
+    while (!done && iter < maxIter) {
+      // large-star: m(u) = min(u, N(u)); every v in N(u) with v > u
+      // relinks to m(u). m < v always holds, so (m, v) is canonical.
+      // The v > u half of sym is the canonical edge set itself, so the
+      // join drives off `edges` directly (one fewer union branch).
+      val sym = edges.select(col("lo").as("u"), col("hi").as("v"))
+        .unionByName(edges.select(col("hi").as("u"), col("lo").as("v")))
+      val mL = sym.groupBy(col("u")).agg(min(col("v")).as("nm"))
+        .select(col("u"), least(col("u"), col("nm")).as("m"))
+      // Convergence (r21): both star passes count their RELINKS as
+      // Observations riding the one checkpoint job — zero relinks in
+      // both passes means each pass was the identity, so next == edges
+      // exactly. This replaces the old membership test (a per-cycle
+      // left join of next against the old edge set plus a row-count
+      // compare) — one full join and its exchanges gone per cycle.
+      // Equivalence is provable, not heuristic: each pass maps every
+      // edge endpoint to a value <= itself, and a finite set mapped
+      // onto itself by a pointwise-<= function is fixed pointwise, so
+      // set-stability forces zero relinks — the two criteria stop on
+      // the SAME cycle (DedupVolumeSpec pins the cycle counts).
+      val obsL = org.apache.spark.sql.Observation()
+      val obsS = org.apache.spark.sql.Observation()
+      val large = edges.select(col("lo").as("u"), col("hi").as("v"))
+        .join(mL, "u")
+        .observe(obsL, count(when(col("m") =!= col("u"), true)).as("relinked"))
+        .select(col("m").as("lo"), col("v").as("hi"))
+      // No distinct here (r21): mS's min and the final distinct are
+      // duplicate-insensitive, and the relink observations only test
+      // zero-ness — collapsing large early bought nothing but one more
+      // exchange per cycle.
+      // small-star keyed at the larger endpoint: m = min of the smaller
+      // neighbors (always < hi); the node and its other small neighbors
+      // relink to m
+      val mS = large.groupBy(col("hi")).agg(min(col("lo")).as("m"))
+      // No distinct on the cycle output (r22): min-aggregation and the
+      // relink observations are duplicate-insensitive (min over a
+      // multiset equals min over its set; zero relinks on copies ⟺
+      // zero on the set), the underlying edge SET evolves identically
+      // cycle-for-cycle, and the final labeling below already dedups —
+      // so the per-cycle distinct bought exact nothing but one full
+      // edge-set exchange + materialization per cycle (guide §2.4:
+      // a distinct on data whose consumers are duplicate-insensitive).
+      // Duplicate growth is bounded: each cycle adds at most one mS row
+      // per hi-node, so the multiset stays O(|edges| + cycles·|nodes|).
+      // The stop cycle is unchanged (DedupVolumeSpec pins the counts).
+      val next = Staged.checkpoint(large.join(mS, "hi")
+        .observe(obsS, count(when(col("lo") =!= col("m"), true)).as("relinked"))
+        .filter(col("lo") =!= col("m"))
+        .select(col("m").as("lo"), col("lo").as("hi"))
+        .unionByName(mS.select(col("m").as("lo"), col("hi"))), eager = true)
+      // An ABSENT metric means AQE's runtime empty-relation propagation
+      // replaced the observed subtree (mid-plan CollectMetrics nodes
+      // are pruned with it): provably zero rows, hence zero relinks —
+      // the converged-empty-graph case (dedupeCorpus over a pair-free
+      // batch hits this on its first cycle).
+      def relinks(o: org.apache.spark.sql.Observation): Long =
+        o.get.get("relinked") match {
+          case Some(n) => n.asInstanceOf[Long]
+          case None =>
+            // r22 (ADVICE): make the pruned-metric fallback visible —
+            // today its only cause is the provably-zero-rows case
+            // above, but a future cause would otherwise silently
+            // declare convergence with under-merged components.
+            System.err.println(
+              "[componentsStar] 'relinked' metric absent (AQE " +
+                "empty-relation pruning): treating as 0 relinks")
+            0L
+        }
+      done = relinks(obsL) == 0L && relinks(obsS) == 0L
+      Staged.release(edges)
+      edges = next
+      iter += 1
     }
+    require(done, s"componentsStar did not converge within $maxIter cycles")
+    edges.select(col("hi").as("doc_id"), col("lo").as("label"))
+      .unionByName(
+        edges.select(col("lo").as("doc_id"), col("lo").as("label")))
+      .distinct() -> iter
   }
 
   /** Benchmark decontamination (q51): for every corpus document, count how
@@ -679,20 +643,13 @@ object DedupOps {
     * [[contamination]]'s home turf — this operator exists for the shuffle
     * regime.
     *
-    * Caching contract: the bench shingle set is `persist()`ed here (it is
-    * read three times — sized, sketched, joined) and is NOT unpersisted
-    * before return, because the returned DataFrame still references it
-    * lazily. The caller owns the release: call
-    * `spark.catalog.clearCache()` (what Bench/Verify do between queries)
-    * or unpersist via the catalog once the result is consumed — otherwise
-    * the cached bench set lives for the session. */
+    * The bench shingle set is staged here (it is read three times —
+    * sized, sketched, joined); see [[graft.ops.Staged]] for its release. */
   def contaminationBloom(corpusShingles: DataFrame, benchShingles: DataFrame,
       fpp: Double = 0.01, broadcastBench: Boolean = false,
       expectedItems: Option[Long] = None): DataFrame = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
-    // persisted: sized, sketched, and joined — three uses; released by the
-    // caller's clearCache like every staged table here
-    val benchSet = benchShingleSet(benchShingles).persist()
+    val benchSet = Staged.persist(benchShingleSet(benchShingles))
     val n = math.max(expectedItems.getOrElse(benchSet.count()), 1L)
     val bloom = benchSet.select(xxhash64(col("g")).as("h"))
       .stat.bloomFilter("h", n, fpp)
@@ -815,8 +772,8 @@ object DedupOps {
     // pre-restructure — three contrib legs); unpersisted, each branch
     // re-ran the whole MinHash pair producer, making q92 cost ~3x q31.
     // components()/canonicalByQuality already stage their pair input the
-    // same way; released by the caller's clearCache (module contract).
-    val p = pairs.persist()
+    // same way.
+    val p = Staged.persist(pairs)
     val withSrc = p
       .join(src.select(col("doc_id").as("doc_a"), col("source").as("src_a")), "doc_a")
       .join(src.select(col("doc_id").as("doc_b"), col("source").as("src_b")), "doc_b")

@@ -65,18 +65,17 @@ object Relational {
     * times rule). o_custkey keying feeds every maintainer groupBy/join
     * exchange-free (§2.4). In production these frames are separate
     * at-rest tables (MV, base, CDC feed) and nothing is re-derived;
-    * staging the shared input is the in-session equivalent. Released by
-    * the caller's clearCache — the staged-frame module contract.
+    * staging the shared input is the in-session equivalent; release:
+    * [[graft.ops.Staged]].
     * q86/q110 (the purely algebraic folds) stay UNSTAGED deliberately:
     * they reference the frame only 2-3 times, and measurement showed the
     * columnar cache build + decode costing more than the saved re-scans
     * (q110 0.49 s -> 0.97 s staged) — §5's caching rule cuts both ways. */
   private def stagedOrdersCdc(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
+    graft.ops.Staged.persist(Tables.orders(s, dir)
       .select(col("o_custkey"), col("o_orderkey"),
         dec(col("o_totalprice")).as("v"))
-      .repartition(s.sparkContext.defaultParallelism, col("o_custkey"))
-      .persist()
+      .repartition(s.sparkContext.defaultParallelism, col("o_custkey")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A-agg: recompute "season totals" style pre-aggregations (SURVEY §2.4)

@@ -599,7 +599,7 @@ object TextOps {
       s"flagFrac must be in (0, 1], got $flagFrac")
     // four consumers (df agg, hit semi-join, totals, doc count) — without
     // the persist the shingle explode re-evaluates per consumer
-    val sh = DedupOps.shingledOf(docs).persist()
+    val sh = graft.ops.Staged.persist(DedupOps.shingledOf(docs))
     val post = sh.select(col("doc_id"), explode(col("sh")).as("g"))
     // one-row doc count joined on a constant key: the threshold needs the
     // corpus size, and a 1-row broadcast equi-join keeps the plan free of
@@ -1354,9 +1354,8 @@ object TextOps {
     // it on one core) and persisted — it is consumed TWICE (the count
     // aggregation and the scoring probe side), and unpersisted each
     // reference re-ran the whole generate (the scaladoc's "persist the
-    // gram frame" option, now taken). Released by the caller's
-    // clearCache — the module's staged-frame contract.
-    val grams = docs
+    // gram frame" option, now taken).
+    val grams = graft.ops.Staged.persist(docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("doc_id"))
       .filter(size(tokens) >= 2)
@@ -1364,8 +1363,7 @@ object TextOps {
       .select(col("doc_id"),
         explode(transform(sequence(lit(1), size(col("w")) - 1),
           i => concat_ws(" ", element_at(col("w"), i), element_at(col("w"), i + 1))))
-          .as("gram"))
-      .persist()
+          .as("gram")))
     val counts = grams.groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
     grams.join(counts, "gram")
       .groupBy(col("doc_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
-import graft.ops.VectorSim
+import graft.ops.{Staged, VectorSim}
 
 /** Similarity search over the `embeddings` table (`array<float>` x 64):
   * brute-force cosine near-dup + top-k as the exact baselines, and an
@@ -71,16 +71,14 @@ object VectorOps {
     * unsplittable input, repartition after the read; profiled: q54 paid
     * four such serial scans, q109's signature stage ran 345 ms on one
     * core). vec_id keying feeds the downstream id-equi-joins without a
-    * further exchange (§2.4). Released by the caller's clearCache — the
-    * same staged-frame contract as `shingled`. */
+    * further exchange (§2.4). Release: [[graft.ops.Staged]]. */
   private def stagedVecs(s: SparkSession, dir: String): DataFrame = {
     val e = VectorSim.toDouble(col("embedding"))
-    Tables.embeddings(s, dir)
+    Staged.persist(Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"))
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), e.as("e"))
-      .withColumn("nrm", VectorSim.norm(col("e")))
-      .persist()
+      .withColumn("nrm", VectorSim.norm(col("e"))))
   }
 
   private def cos(ea: Column, na: Column, eb: Column, nb: Column): Column =
@@ -600,12 +598,8 @@ object VectorOps {
     * comparable across engines. [[kmeansCentroids]] folds the same cells
     * back into (c_id, ce, cn) centroid rows for the IVF search path.
     *
-    * Block ownership: intermediate rounds are released in-loop; the
-    * RETURNED frame is checkpoint-backed and caller-owned — same contract
-    * as [[DedupOps.components]] — so a dropped reference is reaped by the
-    * ContextCleaner, and a long-lived pipeline retraining in one session
-    * can free it eagerly via `graft.ops.Checkpoints.rddsOf(df)
-    * .foreach(_.unpersist(false))`. */
+    * Intermediate rounds are released in-loop; the returned frame is a
+    * staged checkpoint, released as [[graft.ops.Staged]] states. */
   def kmeansCells(n0: DataFrame, k: Int, iters: Int): DataFrame = {
     require(iters >= 1, s"kmeans needs at least one round, got $iters")
     val n = n0.filter(col("nrm") > 0)
@@ -648,7 +642,7 @@ object VectorOps {
           (col("dq.qsum").cast("double") /
             (col("n_members") * KmeansScale).cast("double")).as("value"),
           col("n_members"))
-        .localCheckpoint(true)
+        .transform(Staged.checkpoint(_, eager = true))
     val init = n.filter(col("vec_id") < k)
       .select(col("vec_id").as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
     var cells = round(init)
@@ -657,7 +651,7 @@ object VectorOps {
       // the new round is self-contained — release the previous round's
       // checkpoint blocks (k x dim rows each; it's hygiene, not memory
       // pressure, but a long-trained model should not leak iters frames)
-      graft.ops.Checkpoints.rddsOf(cells).foreach(_.unpersist(false))
+      Staged.release(cells)
       cells = next
     }
     cells

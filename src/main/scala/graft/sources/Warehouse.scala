@@ -626,6 +626,17 @@ object Warehouse {
     found
   }
 
+  /** The parquet table at `dir`, or None when it is absent: the path does
+    * not exist or holds no visible data file ([[dirHasVisibleData]]).
+    * Every other read error — a corrupt file, a permission error —
+    * propagates; it is not an absent table. */
+  def readIfPresent(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p) && dirHasVisibleData(fs, p)) Some(spark.read.parquet(dir))
+    else None
+  }
+
   /** A file is VISIBLE data when every path segment below the table root
     * is free of the '.'/'_' prefixes parquet readers skip (swap siblings,
     * staging, _SUCCESS markers). */

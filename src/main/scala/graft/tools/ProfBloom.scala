@@ -6,6 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.ops.Staged
 import graft.queries.DedupOps
 
 /** Measures what the Bloom prefilter actually buys on decontamination's
@@ -39,12 +40,13 @@ object ProfBloom {
       spark.read.parquet(s"$dir/documents.parquet"))
     def measure(label: String)(f: => org.apache.spark.sql.DataFrame): Unit = {
       // warmup (codegen + JIT), then one measured pass from cold caches
-      f.write.format("noop").mode("overwrite").save()
-      spark.catalog.clearCache()
+      Staged.scope(f.write.format("noop").mode("overwrite").save())
       shuffleWrite.set(0L)
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = Staged.scope {
+        val t0 = System.nanoTime()
+        f.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
       // listener events are posted async (listenerBus is private API);
       // a short settle is enough for stage-completed events at this size
       Thread.sleep(500)

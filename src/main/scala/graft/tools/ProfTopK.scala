@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.ops.Staged
 import graft.queries.TextOps
 
 /** Measures what the bounded-heap quota (q96 / `--quota-heap`) buys on
@@ -24,11 +25,13 @@ object ProfTopK {
     val oneDomain = spark.read.parquet(s"$dir/documents.parquet")
       .withColumn("source", lit("the-one-crawl"))
     def measure(label: String)(f: => org.apache.spark.sql.DataFrame): Unit = {
-      f.write.format("noop").mode("overwrite").save() // warm codegen
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      println(f"[proftopk] $label%-14s wall=${(System.nanoTime() - t0) / 1e9}%6.2fs")
+      Staged.scope(f.write.format("noop").mode("overwrite").save()) // warm codegen
+      val wall = Staged.scope {
+        val t0 = System.nanoTime()
+        f.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      println(f"[proftopk] $label%-14s wall=$wall%6.2fs")
     }
     measure("window-quota")(TextOps.domainQuota(oneDomain, 5))
     measure("heap-quota")(TextOps.domainQuotaHeap(oneDomain, 5))

@@ -38,7 +38,7 @@ class LineupsSpec extends SparkSpec {
     (G, 1L, 10, 0, 1, "12:00", Some(101L), Some(T1), Some(201L), Some(T2), None, None)
 
   test("initial lineups from IN_TIME_REAL==0, emitted sorted (reference :81-86,130-133)") {
-    val out = Lineups.withPlayers(pbpOf(Seq(jumpBall)), rotationsOf())
+    val out = Lineups.withPlayersAndErrors(pbpOf(Seq(jumpBall)), rotationsOf())._1
     val row = out.collect().head
     assert((row.TEAM1_ID, row.TEAM2_ID) == ((T1, T2)))
     assert(Seq(row.TEAM1_PLAYER1, row.TEAM1_PLAYER2, row.TEAM1_PLAYER3,
@@ -53,7 +53,7 @@ class LineupsSpec extends SparkSpec {
       jumpBall,
       (G, 2L, 8, 0, 1, "6:00", Some(103L), Some(T1), Some(106L), Some(T1), None, None),
       (G, 3L, 1, 0, 1, "5:00", Some(101L), Some(T1), None, None, None, None)))
-    val rows = Lineups.withPlayers(pbp, rotationsOf()).collect().sortBy(_.EVENTNUM)
+    val rows = Lineups.withPlayersAndErrors(pbp, rotationsOf())._1.collect().sortBy(_.EVENTNUM)
     def t1(r: graft.schema.PbpWithPlayers) =
       Seq(r.TEAM1_PLAYER1, r.TEAM1_PLAYER2, r.TEAM1_PLAYER3, r.TEAM1_PLAYER4, r.TEAM1_PLAYER5)
     assert(t1(rows(0)) == (101L to 105L))
@@ -73,8 +73,8 @@ class LineupsSpec extends SparkSpec {
         (201L to 205L).map(p => (T2, p, Seq(Stint(0.0, 28800.0)))) ++
         Seq((T2, 206L, Seq(Stint(14400.0, 28800.0)))))
         .toDF("TEAM_ID", "PLAYER_ID", "STINTS").withColumn("GAME_ID", lit(G))
-    val rows = Lineups.withPlayers(pbpOf(Seq(jumpBall,
-      (G, 10L, 12, 0, 2, "12:00", None, None, None, None, None, None))), rot)
+    val rows = Lineups.withPlayersAndErrors(pbpOf(Seq(jumpBall,
+      (G, 10L, 12, 0, 2, "12:00", None, None, None, None, None, None))), rot)._1
       .collect().sortBy(_.EVENTNUM)
     def t1(r: graft.schema.PbpWithPlayers) =
       Seq(r.TEAM1_PLAYER1, r.TEAM1_PLAYER2, r.TEAM1_PLAYER3, r.TEAM1_PLAYER4, r.TEAM1_PLAYER5)
@@ -95,7 +95,7 @@ class LineupsSpec extends SparkSpec {
     val startersDf = starters.toDF("GAME_ID", "PERIOD", "PLAYER_ID", "TEAM_ID")
     val pbp = pbpOf(Seq(jumpBall,
       (G, 20L, 12, 0, 3, "12:00", None, None, None, None, None, None)))
-    val rows = Lineups.withPlayers(pbp, rot, starters = Some(startersDf))
+    val rows = Lineups.withPlayersAndErrors(pbp, rot, starters = Some(startersDf))._1
       .collect().sortBy(_.EVENTNUM)
     val r = rows(1)
     assert(Seq(r.TEAM2_PLAYER1, r.TEAM2_PLAYER2, r.TEAM2_PLAYER3,
@@ -106,16 +106,16 @@ class LineupsSpec extends SparkSpec {
     val pbp = pbpOf(Seq(
       jumpBall,
       (G, 2L, 8, 0, 1, "6:00", Some(999L), Some(T1), Some(106L), Some(T1), None, None)))
-    assert(Lineups.withPlayers(pbp, rotationsOf()).count() == 0)
-    val thrown = intercept[Exception] {
-      Lineups.withPlayers(pbp, rotationsOf(), failFast = true).count()
-    }
-    assert(thrown.getMessage != null)
+    val (rows, errors) = Lineups.withPlayersAndErrors(pbp, rotationsOf())
+    assert(rows.count() == 0)
+    assert(errors.collect().map(_.GAME_ID).toSeq == Seq(G))
   }
 
   test("duplicate EVENTNUM fails the game (check_duplicate_ids, utils/utils.py:1-10)") {
     val pbp = pbpOf(Seq(jumpBall, jumpBall.copy(_6 = "11:00")))
-    assert(Lineups.withPlayers(pbp, rotationsOf()).count() == 0)
+    val (rows, errors) = Lineups.withPlayersAndErrors(pbp, rotationsOf())
+    assert(rows.count() == 0)
+    assert(errors.collect().map(_.GAME_ID).toSeq == Seq(G))
   }
 
   test("no jump ball: teams resolve from MATCHUP 'vs'/'@' (:58-79)") {
@@ -123,7 +123,7 @@ class LineupsSpec extends SparkSpec {
       (G, 1L, 1, 0, 1, "11:00", Some(101L), Some(T1), None, None, None, None)))
     val tgl = Seq((G, T2, "CLE vs. CHA"), (G, T1, "CHA @ CLE"))
       .toDF("GAME_ID", "TEAM_ID", "MATCHUP")
-    val row = Lineups.withPlayers(pbp, rotationsOf(), teamGameLog = Some(tgl))
+    val row = Lineups.withPlayersAndErrors(pbp, rotationsOf(), teamGameLog = Some(tgl))._1
       .collect().head
     // team1 = home ('vs') = T2 here
     assert((row.TEAM1_ID, row.TEAM2_ID) == ((T2, T1)))
@@ -137,7 +137,7 @@ class LineupsSpec extends SparkSpec {
     val rot = rotationsOf().filter(col("PLAYER_ID") =!= 106L)
       .unionByName(Seq((T1, 106L, Seq(Stint(3600.0, 28800.0))))
         .toDF("TEAM_ID", "PLAYER_ID", "STINTS").withColumn("GAME_ID", lit(G)))
-    val out = Lineups.withPlayers(pbp, rot)
+    val out = Lineups.withPlayersAndErrors(pbp, rot)._1
     val chk = Lineups.intervalCheck(out.toDF(), rot)
     // every (event, player) pair that appears has at least one covering stint
     assert(chk.filter(col("n_covering_stints") < 1).count() == 0)
@@ -154,7 +154,7 @@ class LineupsSpec extends SparkSpec {
     val rot = rotationsOf().filter(col("PLAYER_ID") =!= 103L)
       .unionByName(Seq((T1, 103L, Seq(Stint(0.0, 100.0))))
         .toDF("TEAM_ID", "PLAYER_ID", "STINTS").withColumn("GAME_ID", lit(G)))
-    val out = Lineups.withPlayers(pbp, rot)
+    val out = Lineups.withPlayersAndErrors(pbp, rot)._1
     val violations = Lineups.intervalCheck(out.toDF(), rot)
       .filter(col("n_covering_stints") < 1)
       .select(col("EVENTNUM"), col("PLAYER_ID")).as[(Long, Long)].collect().toSet
@@ -168,9 +168,8 @@ class LineupsSpec extends SparkSpec {
       // null clock: SECONDS_FROM_START decodes null into a non-nullable Int
       (bad, 1L, 10, 0, 1, null, Some(101L), Some(T1), Some(201L), Some(T2), None, None)))
     val rot = rotationsOf().unionByName(rotationsOf().withColumn("GAME_ID", lit(bad)))
-    val (rows, errors, release) = Lineups.withPlayersAndErrors(pbp, rot)
+    val (rows, errors) = Lineups.withPlayersAndErrors(pbp, rot)
     assert(rows.collect().map(_.GAME_ID).toSet == Set(G))
     assert(errors.collect().map(_.GAME_ID).toSet == Set(bad))
-    release()
   }
 }

@@ -37,7 +37,7 @@ class LineupsVolumeSpec extends SparkSpec {
       .withColumn("PLAYER3_ID", lit(null).cast("long"))
       .withColumn("PLAYER3_TEAM_ID", lit(null).cast("long"))
 
-    val out = Lineups.withPlayers(pbp, rotations)
+    val out = Lineups.withPlayersAndErrors(pbp, rotations)._1
     val rows = out.collect()
     assert(rows.length == nGames * 4, "every event of every game emitted")
 

@@ -41,13 +41,12 @@ class PipelineMainSpec extends SparkSpec {
       .withColumn("PLAYER3_ID", lit(null).cast("long"))
       .withColumn("PLAYER3_TEAM_ID", lit(null).cast("long"))
 
-    val (rows, errors, release) = Lineups.withPlayersAndErrors(pbp, rotations)
+    val (rows, errors) = Lineups.withPlayersAndErrors(pbp, rotations)
     assert(rows.collect().map(_.GAME_ID).toSet == Set(G1))
     assert(rows.count() == 2)
     val errs = errors.collect()
     assert(errs.length == 1 && errs.head.GAME_ID == G2)
     assert(errs.head.error.contains("999"))
-    release()
   }
 
   test("non-delta rerun is idempotent (ON CONFLICT DO UPDATE semantics) and the quarantine heals") {
@@ -107,6 +106,33 @@ class PipelineMainSpec extends SparkSpec {
       .select("GAME_ID").as[String].collect().toSeq == Seq(G2))
   }
 
+  test("an optional input that is absent is skipped; one that is corrupt fails the run") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline-opt").toString
+    val (in, out) = (s"$dir/in", s"$dir/out")
+    val G = "0022400100"
+    ((1L to 5L).map(p => (G, 100L, p, Seq(Stint(0.0, 28800.0)))) ++
+      (11L to 15L).map(p => (G, 200L, p, Seq(Stint(0.0, 28800.0)))))
+      .toDF("GAME_ID", "TEAM_ID", "PLAYER_ID", "STINTS")
+      .write.parquet(s"$in/rotations")
+    Seq((G, 1L, 10, 0, 1, "12:00", Some(1L), Some(100L), Some(11L), Some(200L)))
+      .toDF("GAME_ID", "EVENTNUM", "EVENTMSGTYPE", "EVENTMSGACTIONTYPE", "PERIOD",
+        "PCTIMESTRING", "PLAYER1_ID", "PLAYER1_TEAM_ID", "PLAYER2_ID", "PLAYER2_TEAM_ID")
+      .withColumn("PLAYER3_ID", lit(null).cast("long"))
+      .withColumn("PLAYER3_TEAM_ID", lit(null).cast("long"))
+      .write.parquet(s"$in/play_by_play")
+    val args = PipelineArgs.Args(gameId = Some(G), input = in, output = out)
+
+    // no players_on_court_at_start_of_period, no team_game_log: both absent
+    PipelineMain.runWith(spark, args)
+    assert(spark.read.parquet(s"$out/play_by_play_with_players").count() == 1)
+
+    val starters = new java.io.File(s"$in/players_on_court_at_start_of_period")
+    starters.mkdirs()
+    java.nio.file.Files.write(new java.io.File(starters, "part-00000.parquet").toPath,
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception](PipelineMain.runWith(spark, args))
+  }
+
   test("createDatabase bootstraps once and is idempotent (S8, db_init.py:7-20)") {
     import graft.sources.Warehouse
     val tmp = java.nio.file.Files.createTempDirectory("graft_db").toString
@@ -126,9 +152,8 @@ class PipelineMainSpec extends SparkSpec {
       .toDF("GAME_ID", "EVENTNUM", "EVENTMSGTYPE", "EVENTMSGACTIONTYPE", "PERIOD",
         "PCTIMESTRING", "PLAYER1_ID", "PLAYER1_TEAM_ID", "PLAYER2_ID", "PLAYER2_TEAM_ID",
         "PLAYER3_ID", "PLAYER3_TEAM_ID")
-    val (rows, errors, release) = Lineups.withPlayersAndErrors(pbp, rotations)
+    val (rows, errors) = Lineups.withPlayersAndErrors(pbp, rotations)
     assert(rows.count() == 0)
     assert(errors.count() == 0)
-    release()
   }
 }

@@ -64,7 +64,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("GAME_ID", "EVENTNUM", "EVENTMSGTYPE", "EVENTMSGACTIONTYPE", "PERIOD",
         "PCTIMESTRING", "PLAYER1_ID", "PLAYER1_TEAM_ID", "PLAYER2_ID", "PLAYER2_TEAM_ID",
         "PLAYER3_ID", "PLAYER3_TEAM_ID")
-    val lineups = Lineups.withPlayers(pbp, back)
+    val lineups = Lineups.withPlayersAndErrors(pbp, back)._1
     val rows = lineups.collect().sortBy(_.EVENTNUM)
     assert(rows.length == 2)
     assert(rows(1).TEAM1_PLAYER5 == 106L)

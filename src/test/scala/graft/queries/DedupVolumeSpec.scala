@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** components() at the shapes that maximize round count: a 32-hop chain and
   * a 64-leaf star (16x the unit-spec graphs). Pins the cost model the
   * scaladoc promises — rounds = diameter (first hop fused into the init),
-  * ONE action per round (the Observation-carrying materialization; the old
-  * shape ran a second join + isEmpty probe per round), and per-round
-  * release of the previous round's checkpoint blocks. */
+  * and ONE action per round (the Observation-carrying materialization; the
+  * old shape ran a second join + isEmpty probe per round). Per-round
+  * release of the previous round's blocks is pinned in StagedSpec. */
 class DedupVolumeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,19 +16,12 @@ class DedupVolumeSpec extends SparkSpec {
     val n = 32 // nodes 0..32, diameter 32
     val pairs = (0 until n).map(i => (i.toLong, (i + 1).toLong))
       .toDF("doc_a", "doc_b")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
     val (labels, rounds) = DedupOps.componentsWithRounds(pairs)
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got.size == n + 1)
     assert(got.values.forall(_ == 0L), "every chained doc joins component 0")
     // the first hop is fused into the init, the last round is the detect
     assert(rounds == n, s"expected $n rounds (diameter, hop 1 in init), got $rounds")
-    // each round must RELEASE the previous round's checkpoint blocks
-    // (Dataset.unpersist can't — the blocks belong to the underlying RDD):
-    // after 32 rounds, at most the final checkpoint + unpersist-in-flight
-    // stragglers may remain, never one entry per round
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 3, s"rounds leaked ${leaked.size} persisted RDDs")
   }
 
   test("pointer jumping turns the 32-chain's rounds from diameter into ~log2(diameter)") {
@@ -80,13 +73,10 @@ class DedupVolumeSpec extends SparkSpec {
       assert(labelsOf(star) == plain, s"$name: star and label-prop disagree")
       assert(cycles <= 8, s"$name: star took $cycles cycles — O(log) promise broken")
     }
-    // the 64-chain specifically: label-prop needs 64 rounds, star ~6 cycles,
-    // and every cycle must release the previous cycle's checkpoint blocks
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // the 64-chain specifically: label-prop needs 64 rounds, star ~6 cycles
+    // (per-cycle block release: StagedSpec)
     val (_, chainCycles) = DedupOps.componentsStarWithRounds(chain)
     assert(chainCycles <= 8, s"64-chain took $chainCycles star cycles")
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 3, s"star cycles leaked ${leaked.size} persisted RDDs")
     // dedupeCorpus(star = true) keeps exactly the survivors label-prop
     // keeps (a 24-chain: inside label-prop's default round budget)
     val short = (0 until 24).map(i => (i.toLong, (i + 1).toLong))
@@ -118,20 +108,21 @@ class DedupVolumeSpec extends SparkSpec {
       Thread.sleep(1000) // listener bus is async
       val actions = seen.asScala.map(_.takeWhile(_ != ':')).toSeq
       // the only in-function DRIVER actions are the eager localCheckpoints
-      // (the canonical edge set's size and each cycle's set-equality test
+      // (taken through graft.ops.Staged, so Spark names that call site;
+      // the canonical edge set's size and each cycle's set-equality test
       // both ride those jobs as Observations): a `count at DedupOps` /
       // `isEmpty at DedupOps` here means the probe-pair-per-cycle shape is
       // back. AQE's async subjobs (withThreadLocalCaptured) belong to
       // those same actions, and the spec's own collect is the one other
       // legitimate action.
-      val allowed = Set("localCheckpoint at DedupOps.scala",
+      val allowed = Set("localCheckpoint at Staged.scala",
         "collect at DedupVolumeSpec.scala",
         "$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java")
       val extra = actions.toSet -- allowed
       assert(extra.isEmpty, s"unexpected actions: $extra")
       // and at most one named action per cycle (plus the init checkpoint):
       // a second driver action per cycle would surface here
-      val checkpoints = actions.count(_ == "localCheckpoint at DedupOps.scala")
+      val checkpoints = actions.count(_ == "localCheckpoint at Staged.scala")
       assert(checkpoints <= cycles + 1,
         s"more checkpoint actions ($checkpoints) than 1 init + $cycles cycles")
     } finally {
@@ -162,7 +153,7 @@ class DedupVolumeSpec extends SparkSpec {
       val actions = seen.asScala.map(_.takeWhile(_ != ':')).toSet
       // withThreadLocalCaptured: AQE's async broadcast-exchange stage — a
       // subjob of the round's single action, not a driver-side probe
-      val allowed = Set("localCheckpoint at DedupOps.scala",
+      val allowed = Set("localCheckpoint at Staged.scala",
         "collect at DedupVolumeSpec.scala",
         "$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java")
       assert(actions.subsetOf(allowed), s"unexpected actions: ${actions -- allowed}")

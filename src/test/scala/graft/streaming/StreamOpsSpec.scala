@@ -471,9 +471,10 @@ class StreamOpsSpec extends SparkSpec {
       // run over the same events + the same static tables, row for row
       val rotations = roster.toDS().toDF()
         .select(col("GAME_ID"), col("TEAM_ID"), col("PLAYER_ID"), col("STINTS"))
-      val batchRows = graft.nba.Lineups.withPlayers(
-        (batch1 ++ batch2).toDS().toDF(), rotations, failFast = true)
-        .collect().toSet
+      val (batchOut, batchErrors) = graft.nba.Lineups.withPlayersAndErrors(
+        (batch1 ++ batch2).toDS().toDF(), rotations)
+      assert(batchErrors.isEmpty, "the batch operator failed a game")
+      val batchRows = batchOut.collect().toSet
       val streamed = spark.sql("SELECT * FROM lineups")
         .as[graft.schema.PbpWithPlayers].collect().toSet
       assert(streamed == batchRows, "stream and batch paths diverged")
